@@ -21,12 +21,16 @@ import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType}
   * bit-equal to the booster's CPU predictor, and
   * `prob = 1/(1+exp(-margin))` matches the app's displayed probability.
   *
-  * Scale design: the whole model is ~95 KB of primitive arrays baked into
-  * the task binary — every executor scores map-side with zero shuffle and
-  * zero per-row allocation (thread-local feature buffer). The SQL-facing
-  * form ([[oracleMarginSql]]) mechanically unrolls the same trees into
-  * nested CASE expressions over REAL (float32) arithmetic, which is what
-  * the DuckDB oracle runs — one source of truth for both engines.
+  * Scale design: every tree is laid out as a complete depth-4 tree of 31
+  * slots (15 splits, 16 leaves; a leaf above depth 4 is copied into both
+  * children), so the scorer walks 400 × 31 slots of (feature, threshold),
+  * about 99 KB baked into the task binary, with a fixed four branch-free
+  * steps per tree and no per-row allocation (thread-local feature buffer).
+  * The decoded node arrays stay as the source the layout and the oracle
+  * SQL are built from. The SQL-facing form ([[oracleMarginChunks]])
+  * mechanically unrolls the same trees into nested CASE expressions over
+  * REAL (float32) arithmetic, which is what the DuckDB oracle runs — one
+  * source of truth for both engines.
   */
 object XgbModel {
   val numFeatures = 15
@@ -77,18 +81,66 @@ object XgbModel {
     marginF(f)
   }
 
-  private def marginF(f: Array[Float]): Float = {
-    var s = 0.0f
+  /** Depth of every tree; a complete tree of this depth has 31 slots. */
+  val depth = 4
+  val slots: Int = (1 << (depth + 1)) - 1
+
+  /** For tree `t`, slot `s` (heap order: children of `s` at `2s+1`, `2s+2`)
+    * copies original node `slotNode(t * slots + s)`. A leaf reached above
+    * the bottom fills its whole subtree, so every path is `depth` steps. */
+  val slotNode: Array[Int] = {
+    val out = new Array[Int](nTrees * slots)
     var t = 0
     while (t < nTrees) {
       val base = offsets(t)
-      var n = 0
-      while (left(base + n) != -1) {
-        val idx = base + n
-        n = if (f(feat(idx)) < thr(idx)) left(idx) else right(idx)
+      out(t * slots) = base
+      var s = 0
+      while (s < slots / 2) {
+        val n = out(t * slots + s)
+        val leaf = left(n) == -1
+        out(t * slots + 2 * s + 1) = if (leaf) n else base + left(n)
+        out(t * slots + 2 * s + 2) = if (leaf) n else base + right(n)
+        s += 1
       }
-      s += thr(base + n)
+      while (s < slots) {
+        require(left(out(t * slots + s)) == -1, s"tree $t is deeper than $depth")
+        s += 1
+      }
       t += 1
+    }
+    out
+  }
+
+  /** Split feature per slot (0 where the slot is a copied leaf: both of its
+    * children are the same leaf, so the comparison cannot matter). */
+  private val slotFeat: Array[Int] =
+    slotNode.map(n => if (left(n) == -1) 0 else feat(n))
+  /** Split threshold per slot; the leaf value at the bottom 16 slots. */
+  private val slotThr: Array[Float] = slotNode.map(thr(_))
+
+  require(nTrees % 4 == 0, s"the kernel steps 4 trees at a time; got $nTrees")
+
+  /** Four trees at a time, each a fixed `depth` steps of
+    * `p = 2p + (f < thr ? 1 : 2)`: NaN and `f == thr` go right, as in
+    * xgboost. Leaves are summed in float32 in tree order, base margin last. */
+  private def marginF(f: Array[Float]): Float = {
+    var s = 0.0f
+    var b = 0
+    val end = nTrees * slots
+    while (b < end) {
+      val b1 = b + slots; val b2 = b1 + slots; val b3 = b2 + slots
+      var p0 = 0; var p1 = 0; var p2 = 0; var p3 = 0
+      var d = 0
+      while (d < depth) {
+        p0 = 2 * p0 + (if (f(slotFeat(b + p0)) < slotThr(b + p0)) 1 else 2)
+        p1 = 2 * p1 + (if (f(slotFeat(b1 + p1)) < slotThr(b1 + p1)) 1 else 2)
+        p2 = 2 * p2 + (if (f(slotFeat(b2 + p2)) < slotThr(b2 + p2)) 1 else 2)
+        p3 = 2 * p3 + (if (f(slotFeat(b3 + p3)) < slotThr(b3 + p3)) 1 else 2)
+        d += 1
+      }
+      s += slotThr(b + p0); s += slotThr(b1 + p1)
+      s += slotThr(b2 + p2); s += slotThr(b3 + p3)
+      b = b3 + slots
     }
     baseMargin + s
   }

@@ -147,7 +147,7 @@ object GraphOps {
     * every round pays map+reduce TASK DISPATCH far out of proportion to
     * its bytes (measured in IterRepro on a synthetic 2.4M-row undDeg:
     * 0.75 s/round at width 32 vs 0.22-0.26 s at width 4-8 on the same
-    * data). Width = rows × ~24 B over an 8 MB/task target, capped at the
+    * data). Width = rows × ~24 B over a 4 MB/task target, capped at the
     * configured width — a 100 TB edge list saturates the cap, so a
     * cluster's sizing is untouched; only the small-relation regime stops
     * over-splitting. */

@@ -2,6 +2,7 @@ package graft.ops
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{DoubleType, FloatType}
 import org.apache.spark.ml.feature.VectorAssembler
 import org.apache.spark.ml.classification.{GBTClassificationModel, GBTClassifier}
 import graft.sources.Tables
@@ -22,8 +23,10 @@ import graft.sources.Tables
   * Unlike the reference — which duplicates the feature list and bucket logic
   * between single-row and bulk scoring (`app_test.py:232-249` vs `:295-301`)
   * — there is exactly one code path here: [[score]] over any DataFrame,
-  * whether one row or one billion. At scale the model is a broadcast-side
-  * artifact; scoring is a map-only stage (no shuffle).
+  * whether one row or one billion. Both scorers sort the raw customer rows
+  * by `customer_id` first and score above the range exchange, so each row
+  * is preprocessed and scored once, after the shuffle: the range sampler
+  * and the map stage evaluate only the cheap synthesis projection.
   */
 object Scoring {
 
@@ -91,27 +94,39 @@ object Scoring {
   }
 
   /** M1+M3: median imputation (7 numerics) + most-frequent imputation
-    * (3 cats), exact fitted statistics. `na.fill` only touches nulls —
-    * unknown categories pass through untouched (they zero out at one-hot). */
-  def impute(df: DataFrame): DataFrame =
-    df.na.fill(numericCols.zip(medians).toMap)
-      .na.fill(modes)
+    * (3 cats), exact fitted statistics, in one projection with `na.fill`'s
+    * semantics: a null or NaN numeric becomes its median, a null category
+    * its mode, and unknown categories pass through untouched (they zero out
+    * at one-hot). Column order is unchanged. */
+  def impute(df: DataFrame): DataFrame = {
+    val fills: Map[String, Any] = numericCols.zip(medians).toMap ++ modes
+    df.select(df.schema.fields.toSeq.map { f =>
+      val c = df.col(s"`${f.name}`")
+      fills.get(f.name).fold(c) { v =>
+        val value = f.dataType match {
+          case DoubleType | FloatType => nanvl(c, lit(null))
+          case _ => c
+        }
+        coalesce(value, lit(v).cast(f.dataType)).as(f.name)
+      }
+    }: _*)
+  }
 
   /** M2: standard scaling z = (x − mean)/scale with fitted constants —
     * pure codegen'd arithmetic, no Spark ML fit. */
   def scale(df: DataFrame): DataFrame =
-    numericCols.zip(means.zip(scales)).foldLeft(df) {
-      case (d, (c, (m, s))) => d.withColumn(s"z_$c", (col(c) - lit(m)) / lit(s))
-    }
+    df.select(col("*") +: numericCols.zip(means.zip(scales)).map {
+      case (c, (m, s)) => ((col(c) - lit(m)) / lit(s)).as(s"z_$c")
+    }: _*)
 
   /** M4: one-hot with sklearn `handle_unknown='ignore'` semantics — an
     * unknown category yields ALL-ZEROS. Spark ML's OneHotEncoder
     * (`handleInvalid="keep"`) would add an extra category instead, so the
     * faithful mapping is explicit indicator columns (SURVEY.md §2.4 M4). */
   def onehot(df: DataFrame): DataFrame =
-    onehotCols.foldLeft(df) { case (d, (out, src, v)) =>
-      d.withColumn(out, when(col(src) === v, 1.0).otherwise(0.0))
-    }
+    df.select(col("*") +: onehotCols.map { case (out, src, v) =>
+      when(col(src) === v, 1.0).otherwise(0.0).as(out)
+    }: _*)
 
   /** Feature columns in ColumnTransformer order: 7 scaled numerics then
     * 8 one-hots (15 total, `best_model.pkl@~7100` num_feature=15). */
@@ -147,17 +162,17 @@ object Scoring {
     * probability → 0/1 prediction (strict > 0.5, matching xgboost's
     * binary:logistic predict and `scoreExact`, `app_test.py:236`) → strict
     * `<` risk bucket (`app_test.py:238`) → percent string (`app_test.py:300`).
-    * Map-only: the model rides to executors as a broadcast task binary. */
+    * Sorts the raw rows first, so the model runs once per row, after the
+    * range exchange; the model rides to executors in the task binary. */
   def score(model: GBTClassificationModel, df: DataFrame): DataFrame = {
     val p1 = element_at(vector_to_array(col("probability")), 2)
-    model.transform(assembler.transform(preprocess(df)))
+    model.transform(assembler.transform(preprocess(df.orderBy("customer_id"))))
       .select(
         col("customer_id"),
         round(p1, 4).as("prob"),
         churnPred(p1).cast("int").as("churn_pred"),
         when(p1 < 0.3, "Low").when(p1 < 0.7, "Medium").otherwise("High").as("risk"),
         format_string("%.2f%%", round(p1, 4) * 100).as("churn_pct"))
-      .orderBy("customer_id")
   }
 
   private def vector_to_array(c: Column) = org.apache.spark.ml.functions.vector_to_array(c)
@@ -222,11 +237,15 @@ object Scoring {
     * numbers the reference app displays (`app_test.py:296`). Fully
     * SQL-expressible (depth-4 CASE unroll over REAL arithmetic), hence
     * oracle-checked end to end, unlike the capability-equivalent
-    * [[scoreBatch]]. Map-only at scale: the ~95 KB model rides inside the
-    * task binary; no shuffle, no broadcast round-trip, no per-row alloc. */
+    * [[scoreBatch]]. Sort, then score: the raw synthesized columns go
+    * through the `customer_id` range exchange, and preprocessing, the
+    * 400-tree margin and the buckets run once per row above it (a second
+    * margin pass under the range sampler costs far more than shuffling 11
+    * raw columns instead of 2). The ~99 KB model rides inside the task
+    * binary; no broadcast round-trip, no per-row alloc. */
   def scoreExact(spark: SparkSession, sf: String): DataFrame = {
     import graft.functions.XgbFunctions.xgb_margin
-    val pre = preprocess(synthCustomers(spark, sf))
+    val pre = preprocess(synthCustomers(spark, sf).orderBy("customer_id"))
     // Probability quantized to float32, not decimal-rounded: the margin is
     // bit-identical across engines, but double `exp` differs in the last ulp
     // between libms, and decimal round() on a boundary-straddling ulp flips
@@ -247,6 +266,5 @@ object Scoring {
         churnPred(p).cast("bigint").as("churn_pred"),
         when(p < 0.3, "Low").when(p < 0.7, "Medium").otherwise("High").as("risk"),
         format_string("%.2f%%", round(p * 100, 2)).as("churn_pct"))
-      .orderBy("customer_id")
   }
 }

@@ -1,7 +1,12 @@
 package graft
 
 import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.catalyst.expressions.{Expression, ScalaUDF}
+import org.apache.spark.sql.execution.SparkPlan
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
 import org.apache.spark.sql.functions._
+import graft.functions.XgbMargin
 import graft.ops.Scoring
 import graft.ops.Scoring.ModelConstants._
 
@@ -69,6 +74,66 @@ class ScoringSpec extends SparkSpec {
     assert(r.getAs[Double]("total_spend") == 646.97)
     assert(r.getAs[String]("gender") == "Male")
     assert(r.getAs[String]("subscription_type") == "Premium")
+  }
+
+  test("impute keeps na.fill's semantics: NaN/null -> median, null -> mode, unknown passes") {
+    val df = Seq(
+      (1L, Some(Double.NaN), Option.empty[Double], 15.0, Some(2.0), 5.0,
+        Some(Double.NaN), 10.0, Option.empty[String], Some("Platinum"), "Annual"),
+      (2L, Some(35.0), Some(12.0), Double.NaN, Option.empty[Double], 5.0,
+        Some(500.0), 10.0, Some("Other"), Option.empty[String], "Biennial"))
+      .toDF(defaultForm.columns: _*)
+    val viaNaFill = df.na.fill(numericCols.zip(medians).toMap).na.fill(modes)
+    val imputed = Scoring.impute(df)
+    assert(imputed.schema == viaNaFill.schema)
+    assert(imputed.orderBy("customer_id").collect().toSeq ==
+      viaNaFill.orderBy("customer_id").collect().toSeq)
+    val Seq(a, b) = imputed.orderBy("customer_id").collect().toSeq
+    assert(a.getAs[Double]("age") == 40.0 && a.getAs[Double]("total_spend") == 646.97)
+    assert(a.getAs[Double]("tenure") == 32.0 && b.getAs[Double]("usage_frequency") == 16.0)
+    assert(b.getAs[Double]("support_calls") == 3.0)
+    assert(a.getAs[String]("gender") == "Male" && b.getAs[String]("subscription_type") == "Premium")
+    assert(a.getAs[String]("subscription_type") == "Platinum" && b.getAs[String]("gender") == "Other")
+    // unknown categories one-hot to all zeros in their blocks
+    val hot = Scoring.onehot(imputed).orderBy("customer_id")
+      .select(onehotCols.map { case (o, _, _) => col(o) }: _*).collect()
+    assert(hot(0).toSeq == Seq(0.0, 1.0, 0.0, 0.0, 0.0, 1.0, 0.0, 0.0))
+    assert(hot(1).toSeq == Seq(0.0, 0.0, 0.0, 1.0, 0.0, 0.0, 0.0, 0.0))
+  }
+
+  test("q_impute_median keeps its column list") {
+    assert(SparkEntry.queries("q_impute_median")(spark, sf0001).columns.toSeq == Seq(
+      "customer_id", "age", "tenure", "usage_frequency", "support_calls", "payment_delay",
+      "total_spend", "last_interaction", "gender", "subscription_type", "contract_length"))
+  }
+
+  /** Every node of the plan a run executed, inside AQE query stages too. */
+  private def planNodes(df: DataFrame): Seq[SparkPlan] = {
+    df.collect()
+    PlanWalk.collect(df.queryExecution.executedPlan) { case p => p }
+  }
+  private object PlanWalk extends AdaptiveSparkPlanHelper
+
+  private def occurrences(nodes: Seq[SparkPlan])(pf: PartialFunction[Expression, Unit]): Int =
+    nodes.map(_.expressions.map(_.collect(pf).size).sum).sum
+
+  private def belowShuffles(nodes: Seq[SparkPlan]): Seq[SparkPlan] =
+    nodes.collect { case e: ShuffleExchangeExec => e }.flatMap(e => PlanWalk.collect(e.child) { case p => p })
+
+  test("q_score_exact plan: the margin runs once, never below a shuffle") {
+    val nodes = planNodes(SparkEntry.queries("q_score_exact")(spark, sf0001))
+    val isMargin: PartialFunction[Expression, Unit] = { case _: XgbMargin => }
+    assert(nodes.exists(_.isInstanceOf[ShuffleExchangeExec]), "expected the orderBy range exchange")
+    assert(occurrences(nodes)(isMargin) == 1)
+    assert(occurrences(belowShuffles(nodes))(isMargin) == 0)
+  }
+
+  test("q_score_batch plan: assembler and model UDFs all run above the shuffle") {
+    val nodes = planNodes(SparkEntry.queries("q_score_batch")(spark, sf0001))
+    val isUdf: PartialFunction[Expression, Unit] = { case _: ScalaUDF => }
+    assert(nodes.exists(_.isInstanceOf[ShuffleExchangeExec]), "expected the orderBy range exchange")
+    assert(occurrences(nodes)(isUdf) > 0)
+    assert(occurrences(belowShuffles(nodes))(isUdf) == 0)
   }
 
   test("risk bucket boundaries are strict <: p=0.3 -> Medium, p=0.7 -> High") {

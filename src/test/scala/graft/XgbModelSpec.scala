@@ -33,6 +33,60 @@ class XgbModelSpec extends SparkSpec {
     assert(java.lang.Float.floatToIntBits(XgbModel.baseMargin) == 1057642966)
   }
 
+  /** The plain pointer walk over the decoded node arrays: the reference the
+    * complete-tree kernel must agree with bit for bit. */
+  private def pointerWalk(f: Array[Float]): Float = {
+    import XgbModel._
+    var s = 0.0f
+    (0 until nTrees).foreach { t =>
+      val base = offsets(t)
+      var n = base
+      while (left(n) != -1) n = base + (if (f(feat(n)) < thr(n)) left(n) else right(n))
+      s += thr(n)
+    }
+    baseMargin + s
+  }
+
+  test("complete-tree layout: 400 x 31 slots that reach every original leaf") {
+    import XgbModel._
+    assert(slots == 31 && slotNode.length == nTrees * slots)
+    (0 until nTrees).foreach { t =>
+      val base = offsets(t)
+      val leaves = (base until offsets(t + 1)).filter(left(_) == -1).toSet
+      val bottom = (slots / 2 until slots).map(s => slotNode(t * slots + s)).toSet
+      assert(slotNode(t * slots) == base)
+      assert(bottom == leaves, s"tree $t: bottom slots $bottom != leaves $leaves")
+    }
+  }
+
+  test("kernel == pointer walk, bit for bit, on >= 100k vectors incl. thresholds, NaN, Inf") {
+    import XgbModel._
+    val rnd = new scala.util.Random(7)
+    def randomVec(): Array[Double] = Array.tabulate(numFeatures) { i =>
+      if (i < 7) rnd.nextGaussian() * 1.5 else rnd.nextInt(2).toDouble
+    }
+    val customers = Scoring.preprocess(Scoring.synthCustomers(spark, sf001))
+      .select(array(Scoring.featureCols.map(col): _*)).collect()
+      .map(_.getSeq[Double](0).toArray).toSeq
+    val random = Seq.fill(100000)(randomVec())
+    val atThresholds = feat.indices.filter(left(_) != -1).flatMap { n =>
+      Seq(thr(n), Math.nextUp(thr(n)), Math.nextDown(thr(n))).map { v =>
+        val x = randomVec(); x(feat(n)) = v.toDouble; x
+      }
+    }
+    val nonFinite = for {
+      _ <- 0 until 50; i <- 0 until numFeatures
+      v <- Seq(Double.NaN, Double.PositiveInfinity, Double.NegativeInfinity)
+    } yield { val x = randomVec(); x(i) = v; x }
+    val all = customers ++ random ++ atThresholds ++ nonFinite
+    assert(customers.size >= 1000 && all.size >= 100000)
+    val bad = all.count { x =>
+      java.lang.Float.floatToIntBits(margin(x)) !=
+        java.lang.Float.floatToIntBits(pointerWalk(x.map(_.toFloat)))
+    }
+    assert(bad == 0, s"$bad of ${all.size} vectors differ from the pointer walk")
+  }
+
   /** Feature vector via the engine's own preprocess stages. */
   private def featuresOf(nums: Seq[Double], g: String, sub: String, con: String): Array[Double] = {
     val df = Seq((1L, nums(0), nums(1), nums(2), nums(3), nums(4), nums(5), nums(6), g, sub, con))
