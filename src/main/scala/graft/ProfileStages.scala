@@ -27,7 +27,7 @@ object ProfileStages {
       .config(sys.env.get("PROFILE_CONF").map(_.split(";").toSeq)
         .getOrElse(Seq.empty).flatMap { kv =>
           kv.split("=", 2) match { case Array(k, v) => Some(k -> v); case _ => None }
-        }.foldLeft(new org.apache.spark.SparkConf()) { case (c, (k, v)) => c.set(k, v) })
+        }.foldLeft(new org.apache.spark.SparkConf(false)) { case (c, (k, v)) => c.set(k, v) })
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
 
@@ -72,9 +72,9 @@ object ProfileStages {
       val cold = (System.nanoTime() - t0) / 1e9
       spark.catalog.clearCache()
       // warm runs (PROFILE_REPS, default 2): min = the JIT/load-free
-      // estimate; stages collected on the LAST rep
+      // estimate; jobs, stages and the gap are reported from that min rep
       val repsN = sys.env.getOrElse("PROFILE_REPS", "2").toInt
-      val warms = (1 to repsN).map { r =>
+      val warms = (1 to repsN).map { _ =>
         lock.synchronized { stages.clear(); jobStages.clear(); jobs = 0 }
         collecting = true
         val t1 = System.nanoTime()
@@ -82,11 +82,11 @@ object ProfileStages {
         val w = (System.nanoTime() - t1) / 1e9
         collecting = false
         spark.catalog.clearCache()
-        w
+        lock.synchronized { (w, jobs, stages.toList, jobStages.toList) }
       }
-      val warm = warms.min
-      System.err.println(f"[prof] ==== $name cold=$cold%.2f warm=$warm%.2f (all: ${warms.map(w => f"$w%.2f").mkString(",")}) jobs=$jobs stages=${stages.size} ====")
-      val byWall = lock.synchronized { stages.sortBy(-_.wallMs).toList }
+      val (warm, minJobs, minStages, minJobStages) = warms.minBy(_._1)
+      System.err.println(f"[prof] ==== $name cold=$cold%.2f warm=$warm%.2f (all: ${warms.map(w => f"${w._1}%.2f").mkString(",")}) jobs=$minJobs stages=${minStages.size} ====")
+      val byWall = minStages.sortBy(-_.wallMs)
       val totWall = byWall.map(_.wallMs).sum
       System.err.println(f"[prof] stage wall sum=${totWall / 1e3}%.2f s (gaps = driver/plan time: ${warm - totWall / 1e3}%.2f s)")
       byWall.take(14).foreach { s =>
@@ -95,7 +95,7 @@ object ProfileStages {
           System.err.println(s.detail.linesIterator.take(12).map("[prof]      | " + _).mkString("\n"))
       }
       if (sys.env.contains("PROFILE_JOBS"))
-        lock.synchronized { jobStages.toList }.foreach { case (id, desc, sids) =>
+        minJobStages.foreach { case (id, desc, sids) =>
           System.err.println(s"[prof]   job $id stages=${sids.mkString(",")} $desc")
         }
     }

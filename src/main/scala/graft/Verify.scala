@@ -1,4 +1,5 @@
 package graft
+import graft.sources.Tables
 import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
@@ -96,7 +97,7 @@ object Verify {
             val hashOracled = SparkEntry.oracleSql.contains(name)
             def snap(df: org.apache.spark.sql.DataFrame): Seq[String] =
               if (hashOracled) canonRows(df) else Seq(df.count().toString)
-            val dumped = snap(spark.read.parquet(s"$outDir/$name"))
+            val dumped = snap(Tables.parquet(spark, s"$outDir/$name"))
             spark.conf.set("spark.sql.shuffle.partitions", "13")
             spark.conf.set("spark.sql.files.maxPartitionBytes", "1048576")
             val perturbed =
@@ -178,8 +179,8 @@ object Verify {
                   s"scratch kept at $scratch)")
               } else {
                 val bad = a.filter { sub =>
-                  canonRows(spark.read.parquet(s"$standDir/$sub")) !=
-                    canonRows(spark.read.parquet(s"$scratch/$sub"))
+                  canonRows(Tables.parquet(spark, s"$standDir/$sub")) !=
+                    canonRows(Tables.parquet(spark, s"$scratch/$sub"))
                 }
                 if (bad.nonEmpty) {
                   unstable ::= s"artifact:$key"

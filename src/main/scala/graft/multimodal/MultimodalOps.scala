@@ -181,9 +181,9 @@ object MultimodalOps {
       .repartition(spark.conf.get("spark.sql.shuffle.partitions").toInt,
         col("media_id"))
       .persistOnce() // feeds the banding and BOTH verify re-attach joins
+    val (buckets, bandsPerFeat) = VectorOps.bandBuckets(col("v"))
     val banded = feats
-      .select(col("media_id"),
-        posexplode(VectorOps.bandBuckets(col("v"))).as(Seq("band", "bucket")))
+      .select(col("media_id"), posexplode(buckets).as(Seq("band", "bucket")))
       .persistOnce() // both sides of the candidate self-join; stream side
                      // inherits feats' explicit machine-wide spread
     // broadcast() GUARDED on the build side (1-row probe on the persisted
@@ -198,7 +198,7 @@ object MultimodalOps {
     val cap = spark.conf.getOption(VectorOps.VectorBroadcastMaxRowsKey)
       .map(_.toLong).getOrElse(VectorOps.VectorBroadcastMaxRows)
     val maybeBc: DataFrame => DataFrame =
-      if (nFeats * VectorOps.DedupBands <= cap) broadcast else identity
+      if (nFeats * bandsPerFeat <= cap) broadcast else identity
     val cands = banded.as("a")
       .join(maybeBc(banded.select(col("media_id").as("ib"), col("band"), col("bucket"))),
         Seq("band", "bucket"))

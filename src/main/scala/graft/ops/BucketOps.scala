@@ -67,7 +67,7 @@ object BucketOps {
   private def ensureRegistered(spark: SparkSession, name: String,
                                path: String, key: String): Unit =
     if (!spark.catalog.tableExists(name)) {
-      val schema = spark.read.parquet(path).schema.toDDL
+      val schema = Tables.parquet(spark, path).schema.toDDL
       spark.sql(s"CREATE TABLE $name ($schema) USING PARQUET " +
         s"CLUSTERED BY ($key) SORTED BY ($key) INTO $BucketCount BUCKETS " +
         s"LOCATION '$path'")

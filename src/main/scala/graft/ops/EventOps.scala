@@ -783,7 +783,7 @@ object EventOps {
           count(lit(1)).as("n_rows"))
         .write.mode("overwrite").parquet(d)
     }
-    spark.read.parquet(dir)
+    Tables.parquet(spark, dir)
       .groupBy(date_trunc("month", col("day")).cast("date").as("month"))
       .agg(
         expr("hll_sketch_estimate(hll_union_agg(hsk, false))").as("uniq_est"),

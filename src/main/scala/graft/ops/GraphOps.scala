@@ -39,7 +39,7 @@ object GraphOps {
         .distinct()
         .write.parquet(s"$d/edges")
     }
-    spark.read.parquet(s"$dir/edges")
+    Tables.parquet(spark, s"$dir/edges")
   }
 
   /** Session-lifetime memo of the PERSISTED edge scan per (context, sf,
@@ -552,7 +552,7 @@ object GraphOps {
     val labDir = graft.ops.SourceOps.materialize(s"lpa_labels_$sf") { d =>
       lpaLabels(spark, sf).write.parquet(s"$d/labels")
     }
-    val labels = spark.read.parquet(s"$labDir/labels")
+    val labels = Tables.parquet(spark, s"$labDir/labels")
     val deg = e.select(col("u").as("node")).union(e.select(col("v").as("node")))
       .groupBy("node").agg(count(lit(1)).as("deg"))
     val mTot = e.agg(count(lit(1)).as("m"))

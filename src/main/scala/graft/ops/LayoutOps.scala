@@ -89,12 +89,12 @@ object LayoutOps {
         .select("event_id", "ts", "event_type", "value")
         .repartition(64).write.parquet(s"$d/small")
       // the fix: range-cluster on ts into 4 right-sized, disjoint files
-      spark.read.parquet(s"$d/small")
+      Tables.parquet(spark, s"$d/small")
         .repartitionByRange(4, col("ts"))
         .sortWithinPartitions("ts")
         .write.parquet(s"$d/compacted")
     }
-    spark.read.parquet(s"$dir/compacted")
+    Tables.parquet(spark, s"$dir/compacted")
       .groupBy("event_type")
       .agg(count(lit(1)).as("n"), round(sum("value"), 4).as("sum_value"))
       .orderBy("event_type")

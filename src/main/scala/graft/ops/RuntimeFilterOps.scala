@@ -107,7 +107,7 @@ object RuntimeFilterOps {
     * computes (the oracle), so pruning is proven to change IO, not
     * answers; the plan pin lives in SinkSpec. */
   def dppJoin(spark: SparkSession, sf: String): DataFrame = {
-    val fact = spark.read.parquet(SourceOps.eventsDayDir(spark, sf))
+    val fact = Tables.parquet(spark, SourceOps.eventsDayDir(spark, sf))
     // calendar dim built from a range (NOT from the fact — a real date dim
     // table): campaign days are a pure day-of-month rule so the DuckDB
     // oracle reproduces membership without seeing the dim. The span

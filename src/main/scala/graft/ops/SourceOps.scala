@@ -245,7 +245,7 @@ object SourceOps {
     * asserts the pruned-partition count on the same layout. */
   def partitionPrune(spark: SparkSession, sf: String): DataFrame = {
     val dir = eventsDayDir(spark, sf)
-    spark.read.parquet(dir)
+    Tables.parquet(spark, dir)
       .filter(col("day") === lit("2024-01-03").cast("date"))
       .groupBy("event_type")
       .agg(count(lit(1)).as("n"), round(sum("value"), 4).as("sum_value"))

@@ -1697,7 +1697,7 @@ object TextOps {
         .groupBy("doc_id", "tok").agg(count(lit(1)).as("tf"))
         .write.parquet(s"$d/post")
     }
-    spark.read.parquet(s"$dir/post")
+    Tables.parquet(spark, s"$dir/post")
   }
 
   /** The standing CORPUS-PARTITION postings artifact (doc_id % 10 != 0 —
@@ -1714,7 +1714,7 @@ object TextOps {
         .groupBy("doc_id", "tok").agg(count(lit(1)).as("tf"))
         .write.parquet(s"$d/post")
     }
-    spark.read.parquet(s"$dir/post")
+    Tables.parquet(spark, s"$dir/post")
   }
 
   /** INCREMENTAL postings maintenance — ingest (r16 verdict #3: the
@@ -1767,7 +1767,7 @@ object TextOps {
       postingsPartArtifact(spark, sf).groupBy("doc_id")
         .agg(sum("tf").as("len")).write.parquet(s"$d/len")
     }
-    spark.read.parquet(s"$dir/len")
+    Tables.parquet(spark, s"$dir/len")
   }
 
   /** The corpus-partition scalar counters (n_docs, sum_len) as RAW exact
@@ -1783,7 +1783,7 @@ object TextOps {
         .agg(count(lit(1)).as("n_docs"), coalesce(sum("len"), lit(0L)).as("sum_len"))
         .write.parquet(s"$d/st")
     }
-    spark.read.parquet(s"$dir/st")
+    Tables.parquet(spark, s"$dir/st")
   }
 
   /** The per-document chain's maintained relations — post-maintenance
@@ -1931,7 +1931,7 @@ object TextOps {
       Tables.load(spark, sf, "documents")
         .agg(count(lit(1)).cast("double").as("n_docs")).write.parquet(s"$d/n")
     }
-    spark.read.parquet(s"$dir/n")
+    Tables.parquet(spark, s"$dir/n")
   }
 
   /** The standing per-document LENGTH artifact (doc_id → len), staged
@@ -1949,7 +1949,7 @@ object TextOps {
       postingsArtifact(spark, sf).groupBy("doc_id")
         .agg(sum("tf").as("len")).write.parquet(s"$d/len")
     }
-    spark.read.parquet(s"$dir/len")
+    Tables.parquet(spark, s"$dir/len")
   }
 
   /** The 1-row corpus-stats artifact (n_docs of token-bearing docs,
@@ -1967,7 +1967,7 @@ object TextOps {
         .agg(count(lit(1)).cast("double").as("n_docs"), avg("len").as("avg_len"))
         .write.parquet(s"$d/st")
     }
-    spark.read.parquet(s"$dir/st")
+    Tables.parquet(spark, s"$dir/st")
   }
 
   /** BM25 served ENTIRELY from standing state — zero corpus scans AND
@@ -2232,7 +2232,7 @@ object TextOps {
       lexCounts(Tables.load(spark, sf, "documents")
         .filter(col("doc_id") % 10 =!= 0)).write.parquet(s"$d/df")
     }
-    spark.read.parquet(s"$dir/df")
+    Tables.parquet(spark, s"$dir/df")
   }
 
   /** The FULL-corpus lexical artifact [[dfDowndate]] subtracts from —
@@ -2242,7 +2242,7 @@ object TextOps {
     val dir = graft.ops.SourceOps.materialize(s"lex_df_full_$sf") { d =>
       lexCounts(Tables.load(spark, sf, "documents")).write.parquet(s"$d/df")
     }
-    spark.read.parquet(s"$dir/df")
+    Tables.parquet(spark, s"$dir/df")
   }
 
   /** Merge (or, negated, REMOVE) a batch's lexical counts into a standing
@@ -2309,7 +2309,7 @@ object TextOps {
     val dir = graft.ops.SourceOps.materialize(s"lex_df_maint_$sf") { d =>
       dfUpdate(spark, sf).write.parquet(s"$d/df")
     }
-    spark.read.parquet(s"$dir/df")
+    Tables.parquet(spark, s"$dir/df")
   }
 
   /** The composed lexical chain (see [[lexLifecycle]]), built at ONE site
@@ -2448,7 +2448,7 @@ object TextOps {
         .filter(col("doc_id") % 10 =!= 0)
         .agg(count(lit(1)).as("n_docs")).write.parquet(s"$d/n")
     }
-    spark.read.parquet(s"$dir/n")
+    Tables.parquet(spark, s"$dir/n")
   }
 
   /** TF-IDF under COMPOSED maintenance — [[postingsLifecycle]]'s

@@ -275,9 +275,11 @@ object VectorOps {
   val DedupBandBits = 2
   private val bandPlanes: Array[Array[Double]] = mkPlanes(DedupBands * DedupBandBits, 1L << 32)
 
-  /** One bucket id per band: the sign pattern of that band's hyperplanes. */
-  def bandBuckets(v: Column): Column =
-    bandBucketsOf(v, DedupBands, DedupBandBits, bandPlanes)
+  /** One bucket id per band (the sign pattern of that band's hyperplanes),
+    * with the array's length: the rows a `posexplode` of it emits per
+    * vector, which a broadcast guard on the banded relation multiplies by. */
+  def bandBuckets(v: Column): (Column, Int) =
+    (bandBucketsOf(v, DedupBands, DedupBandBits, bandPlanes), DedupBands)
 
   /** Generalized banding — `bits` is the LOG-SCALE knob a production dedup
     * raises with corpus size: candidate volume in a band is Σ(bucket²) ≈
@@ -773,7 +775,7 @@ object VectorOps {
       pqEncodeFrom(km.transform(corpus).select(col("vec_id"), col("v"), col("cell")),
         codebook).write.parquet(s"$d/enc")
     }
-    spark.read.parquet(s"$idxDir/enc")
+    Tables.parquet(spark, s"$idxDir/enc")
   }
 
   /** Compact when the tombstoned fraction of the standing index reaches
@@ -830,7 +832,7 @@ object VectorOps {
           round(col("dead_fraction"), 4).as("dead_fraction"))
         .write.parquet(s"$d/audit")
     }
-    val compacted = spark.read.parquet(s"$cmpDir/enc")
+    val compacted = Tables.parquet(spark, s"$cmpDir/enc")
     val remaining = corpus.filter(col("vec_id") % 7 =!= 3)
     val probes = remaining.filter(col("vec_id") < 5)
       .select(col("vec_id").as("probe_id"), col("v").as("pv"))
@@ -1028,7 +1030,7 @@ object VectorOps {
         s"lifecycle compaction invoked below threshold: dead=$deadFrac < $CompactDeadFraction")
       liveView.write.parquet(s"$d/enc")
     }
-    val compacted = spark.read.parquet(s"$cmpDir/enc")
+    val compacted = Tables.parquet(spark, s"$cmpDir/enc")
     val liveCorpus = emb.filter(col("vec_id") % 7 =!= 3)
     val probes = liveCorpus.filter(col("vec_id") < 5)
       .select(col("vec_id").as("probe_id"), col("v").as("pv"))
@@ -1311,7 +1313,7 @@ object VectorOps {
           covExactFromSums(col("c")).as("cov"))
         .write.parquet(s"$d/cells")
     }
-    val tri = spark.read.parquet(s"$dir/cells")
+    val tri = Tables.parquet(spark, s"$dir/cells")
     tri.union(tri.filter(col("i") =!= col("j"))
       .select(col("j").as("i"), col("i").as("j"), col("cov")))
   }
@@ -1408,7 +1410,7 @@ object VectorOps {
       pcaPower(spark, sf).select(col("i"), col("comp"), col("lambda"))
         .write.parquet(s"$d/pc")
     }
-    spark.read.parquet(s"$dir/pc")
+    Tables.parquet(spark, s"$dir/pc")
   }
 
   /** Projection of every embedding onto the top principal component — the
@@ -1507,7 +1509,7 @@ object VectorOps {
           (1 until k).map(eigPair(spark, sf, _)))
           .write.parquet(s"$d/pc")
       }
-      spark.read.parquet(s"$dir/pc")
+      Tables.parquet(spark, s"$dir/pc")
     }
   }
 
@@ -1545,7 +1547,7 @@ object VectorOps {
     val dir = graft.ops.SourceOps.materialize(s"pca_eig2_$sf") { d =>
       pcaDeflate(spark, sf).write.parquet(s"$d/pc2")
     }
-    spark.read.parquet(s"$dir/pc2")
+    Tables.parquet(spark, s"$dir/pc2")
   }
 
   /** PCA WHITENING over the two staged eigenpairs — the decorrelated
@@ -1647,7 +1649,7 @@ object VectorOps {
           col("c.sx").as("sx"), col("c.sy").as("sy"), col("c.n").as("n"))
         .write.parquet(s"$d/sums")
     }
-    spark.read.parquet(s"$dir/sums")
+    Tables.parquet(spark, s"$dir/sums")
   }
 
   /** INCREMENTAL covariance maintenance — the moment-store twin of
@@ -1726,7 +1728,7 @@ object VectorOps {
           col("c.sx").as("sx"), col("c.sy").as("sy"), col("c.n").as("n"))
         .write.parquet(s"$d/sums")
     }
-    spark.read.parquet(s"$dir/sums")
+    Tables.parquet(spark, s"$dir/sums")
   }
 
   /** Moment-store DOWNDATE — [[covUpdate]]'s mirror and the covariance

@@ -1,6 +1,7 @@
 package graft.streaming
 
 import java.sql.Timestamp
+import graft.sources.Tables
 import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
@@ -410,10 +411,10 @@ object StreamOps {
         // second identical drain = the flush restart (see scaladoc)
         (1 to 2).foreach { _ =>
           val cs = spark.readStream
-            .schema(spark.read.parquet(s"$inDir/clicks").schema)
+            .schema(Tables.parquet(spark, s"$inDir/clicks").schema)
             .option("maxFilesPerTrigger", "1").parquet(s"$inDir/clicks")
           val ps = spark.readStream
-            .schema(spark.read.parquet(s"$inDir/purch").schema)
+            .schema(Tables.parquet(spark, s"$inDir/purch").schema)
             .option("maxFilesPerTrigger", "1").parquet(s"$inDir/purch")
           val q = purchaseAttributionOuter(cs, ps, delay = "1 hour")
             .writeStream.format("parquet")
@@ -423,7 +424,7 @@ object StreamOps {
           q.awaitTermination()
         }
       } finally spark.conf.set("spark.sql.shuffle.partitions", prevShuffle)
-      spark.read.parquet(s"$run/out")
+      Tables.parquet(spark, s"$run/out")
         .groupBy("user_id")
         .agg(count(col("click_ts")).as("n_matched"),
           count(when(col("click_ts").isNull, 1)).as("n_expired"),
@@ -466,7 +467,7 @@ object StreamOps {
       val ord = graft.sources.Tables.load(spark, sf, "orders")
         .select("o_custkey", "o_orderkey", "o_orderdate", "o_totalprice")
       val stream = spark.readStream
-        .schema(spark.read.parquet(s"$inDir/in").schema)
+        .schema(Tables.parquet(spark, s"$inDir/in").schema)
         .option("maxFilesPerTrigger", "2").parquet(s"$inDir/in")
       val prevShuffle = spark.conf.get("spark.sql.shuffle.partitions")
       try {
@@ -482,7 +483,7 @@ object StreamOps {
           .start()
         q.awaitTermination()
       } finally spark.conf.set("spark.sql.shuffle.partitions", prevShuffle)
-      spark.read.parquet(s"$run/out")
+      Tables.parquet(spark, s"$run/out")
         .orderBy("event_id")
         .localCheckpoint() // eager — the run dir (sink + checkpoint) is deleted on exit
     }
@@ -555,7 +556,7 @@ object StreamOps {
       return baseMv.select(col("bucket"), col("n"),
           round(col("s"), 2).as("sum_bal"))
         .filter(col("n") > 0).orderBy("bucket")
-    val deltas = spark.read.parquet(logDir)
+    val deltas = Tables.parquet(spark, logDir)
       .dropDuplicates("bucket", "batch_id")
       .groupBy("bucket")
       .agg(sum("dn").as("dn"), sum("ds").as("ds"))
@@ -625,9 +626,9 @@ object StreamOps {
         .repartition(4).write.parquet(s"$d/purch")
     }
     withRunDir("stream_attrib_run_") { run =>
-    val cs = spark.readStream.schema(spark.read.parquet(s"$inDir/clicks").schema)
+    val cs = spark.readStream.schema(Tables.parquet(spark, s"$inDir/clicks").schema)
       .option("maxFilesPerTrigger", "2").parquet(s"$inDir/clicks")
-    val ps = spark.readStream.schema(spark.read.parquet(s"$inDir/purch").schema)
+    val ps = spark.readStream.schema(Tables.parquet(spark, s"$inDir/purch").schema)
       .option("maxFilesPerTrigger", "2").parquet(s"$inDir/purch")
     // a stream-stream join commits ~4 state stores per shuffle partition per
     // side per micro-batch; at the harness's 32 shuffle partitions that is
@@ -647,7 +648,7 @@ object StreamOps {
         .start()
       q.awaitTermination()
     } finally spark.conf.set("spark.sql.shuffle.partitions", prevShuffle)
-    spark.read.parquet(s"$run/out")
+    Tables.parquet(spark, s"$run/out")
       .select(col("user_id"),
         date_format(col("purchase_ts"), "yyyy-MM-dd HH:mm:ss").as("purchase_ts"),
         date_format(col("click_ts"), "yyyy-MM-dd HH:mm:ss").as("click_ts"),
@@ -676,7 +677,7 @@ object StreamOps {
         .repartition(6).write.parquet(s"$d/in")
     }
     withRunDir("stream_dedup_run_") { run =>
-    val stream = spark.readStream.schema(spark.read.parquet(s"$inDir/in").schema)
+    val stream = spark.readStream.schema(Tables.parquet(spark, s"$inDir/in").schema)
       .option("maxFilesPerTrigger", "2").parquet(s"$inDir/in")
     val prevShuffle = spark.conf.get("spark.sql.shuffle.partitions")
     try {
@@ -688,7 +689,7 @@ object StreamOps {
         .start()
       q.awaitTermination()
     } finally spark.conf.set("spark.sql.shuffle.partitions", prevShuffle)
-    spark.read.parquet(s"$run/out")
+    Tables.parquet(spark, s"$run/out")
       .groupBy("event_type")
       .agg(count(lit(1)).as("n_events"),
         countDistinct(col("user_id")).as("n_users"),
@@ -729,7 +730,7 @@ object StreamOps {
         d, "in", 6, col("ts"), minParts = 3)
     }
     withRunDir("stream_window_run_") { run =>
-    val stream = spark.readStream.schema(spark.read.parquet(s"$inDir/in").schema)
+    val stream = spark.readStream.schema(Tables.parquet(spark, s"$inDir/in").schema)
       .option("maxFilesPerTrigger", "2").parquet(s"$inDir/in")
     val prevShuffle = spark.conf.get("spark.sql.shuffle.partitions")
     try {
@@ -741,7 +742,7 @@ object StreamOps {
         .start()
       q.awaitTermination()
     } finally spark.conf.set("spark.sql.shuffle.partitions", prevShuffle)
-    spark.read.parquet(s"$run/out")
+    Tables.parquet(spark, s"$run/out")
       .select(date_format(col("hour"), "yyyy-MM-dd HH:mm:ss").as("hour"),
         col("event_type"), col("n"), col("sum_value"))
       .orderBy("hour", "event_type")
@@ -789,7 +790,7 @@ object StreamOps {
     }
     withRunDir("stream_update_run_") { run =>
       val stream = spark.readStream
-        .schema(spark.read.parquet(s"$inDir/in").schema)
+        .schema(Tables.parquet(spark, s"$inDir/in").schema)
         .option("maxFilesPerTrigger", "2").parquet(s"$inDir/in")
       val prevShuffle = spark.conf.get("spark.sql.shuffle.partitions")
       try {
@@ -805,7 +806,7 @@ object StreamOps {
           .start()
         q.awaitTermination()
       } finally spark.conf.set("spark.sql.shuffle.partitions", prevShuffle)
-      dashboardFinalState(spark.read.parquet(s"$run/log"))
+      dashboardFinalState(Tables.parquet(spark, s"$run/log"))
         .localCheckpoint() // eager — the run dir (sink + ckpt) dies on exit
     }
   }
@@ -893,7 +894,7 @@ object StreamOps {
         d, "in", 6, col("ts"), minParts = 3)
     }
     withRunDir("stream_running_run_") { run =>
-    val stream = spark.readStream.schema(spark.read.parquet(s"$inDir/in").schema)
+    val stream = spark.readStream.schema(Tables.parquet(spark, s"$inDir/in").schema)
       .option("maxFilesPerTrigger", "2").parquet(s"$inDir/in")
     val prevShuffle = spark.conf.get("spark.sql.shuffle.partitions")
     val providerKey = "spark.sql.streaming.stateStore.providerClass"
@@ -916,7 +917,7 @@ object StreamOps {
     val rowDigest = conv(substring(md5(concat_ws("|",
       f(col("user_id")), f(col("event_id")), f(col("seq")),
       f(col("cum_cents")))), 1, 15), 16, 10).cast("long")
-    spark.read.parquet(s"$run/out")
+    Tables.parquet(spark, s"$run/out")
       .select(col("user_id"), col("seq"), col("cum_cents"),
         rowDigest.as("digest"))
       .groupBy("user_id")
@@ -954,7 +955,7 @@ object StreamOps {
         minParts = 3)
     }
     withRunDir("stream_cov_run_") { run =>
-      val stream = spark.readStream.schema(spark.read.parquet(s"$inDir/in").schema)
+      val stream = spark.readStream.schema(Tables.parquet(spark, s"$inDir/in").schema)
         .option("maxFilesPerTrigger", "2").parquet(s"$inDir/in")
       val prevShuffle = spark.conf.get("spark.sql.shuffle.partitions")
       val providerKey = "spark.sql.streaming.stateStore.providerClass"
@@ -980,7 +981,7 @@ object StreamOps {
         spark.conf.set("spark.sql.shuffle.partitions", prevShuffle)
         prevProvider.fold(spark.conf.unset(providerKey))(spark.conf.set(providerKey, _))
       }
-      spark.read.parquet(s"$run/out").localCheckpoint()
+      Tables.parquet(spark, s"$run/out").localCheckpoint()
     }
   }
 
@@ -1073,7 +1074,7 @@ object StreamOps {
         minParts = 2)
     }
     withRunDir("stream_ann_run_") { run =>
-      val stream = spark.readStream.schema(spark.read.parquet(s"$inDir/in").schema)
+      val stream = spark.readStream.schema(Tables.parquet(spark, s"$inDir/in").schema)
         .option("maxFilesPerTrigger", "1").parquet(s"$inDir/in")
       val q = stream.writeStream
         .option("checkpointLocation", s"$run/ckpt")
@@ -1092,7 +1093,7 @@ object StreamOps {
         .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
         .start()
       q.awaitTermination()
-      val log = spark.read.parquet(s"$run/log")
+      val log = Tables.parquet(spark, s"$run/log")
       // replay-safe compaction on the ENCODING's key — one row per
       // (vector, PQ subspace), so the dedup key is (vec_id, s); keying on
       // vec_id alone would silently discard 7 of the 8 subspace codes
@@ -1149,7 +1150,7 @@ object StreamOps {
       sf: String): DataFrame = {
     val inDir = stagedIngestDocsDir(spark, sf)
     withRunDir("stream_df_run_") { run =>
-      val stream = spark.readStream.schema(spark.read.parquet(s"$inDir/in").schema)
+      val stream = spark.readStream.schema(Tables.parquet(spark, s"$inDir/in").schema)
         .option("maxFilesPerTrigger", "1").parquet(s"$inDir/in")
       val q = stream.writeStream
         .option("checkpointLocation", s"$run/ckpt")
@@ -1162,7 +1163,7 @@ object StreamOps {
         .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
         .start()
       q.awaitTermination()
-      spark.read.parquet(s"$run/log")
+      Tables.parquet(spark, s"$run/log")
         .dropDuplicates("tok", "batch_id")
         .localCheckpoint() // eager — the run dir (log + ckpt) dies on exit
     }
@@ -1233,7 +1234,7 @@ object StreamOps {
       sf: String, withCounts: Boolean): (DataFrame, Option[DataFrame]) = {
     val inDir = stagedIngestDocsDir(spark, sf)
     withRunDir("stream_post_run_") { run =>
-      val stream = spark.readStream.schema(spark.read.parquet(s"$inDir/in").schema)
+      val stream = spark.readStream.schema(Tables.parquet(spark, s"$inDir/in").schema)
         .option("maxFilesPerTrigger", "1").parquet(s"$inDir/in")
       val q = stream.writeStream
         .option("checkpointLocation", s"$run/ckpt")
@@ -1252,11 +1253,11 @@ object StreamOps {
         .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
         .start()
       q.awaitTermination()
-      (spark.read.parquet(s"$run/log")
+      (Tables.parquet(spark, s"$run/log")
         .dropDuplicates("doc_id", "tok", "batch_id")
         .localCheckpoint(), // eager — the run dir (log + ckpt) dies on exit
        if (withCounts)
-         Some(spark.read.parquet(s"$run/nlog")
+         Some(Tables.parquet(spark, s"$run/nlog")
            .dropDuplicates("batch_id")
            .localCheckpoint())
        else None)
@@ -1355,7 +1356,7 @@ object StreamOps {
   /** Compaction view over the [[foreachBatchMerge]] log: latest value per
     * key by (event time, batch id) — one aggregate, map-side combinable. */
   def latestState(spark: org.apache.spark.sql.SparkSession, logDir: String): DataFrame =
-    spark.read.parquet(logDir)
+    Tables.parquet(spark, logDir)
       .groupBy("user_id")
       .agg(max_by(struct(col("ts"), col("value")),
         struct(col("ts"), col("batch_id"))).as("b"))
