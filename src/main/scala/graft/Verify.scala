@@ -83,11 +83,12 @@ object Verify {
             // different merge tree (13 reducers) AND different map-side
             // split boundaries (1 MB input splits), so any order-dependent
             // float sum feeding a rounded output moves here if it can move.
-            // This per-query re-run shares the JVM's memoized staging
-            // artifacts and model caches (SourceOps.materialize,
-            // kmCache/pqCache), so it covers query EVALUATION over fixed
-            // artifacts; artifact CONSTRUCTION under perturbed partitioning
-            // is gated separately by the re-derivation pass after this loop
+            // This per-query re-run shares the JVM's staged artifacts and
+            // fitted models (the Artifacts stage and fitOrLoad tiers), so
+            // it covers query EVALUATION over fixed artifacts; session
+            // artifacts key on the perturbed confs and are rebuilt here.
+            // Artifact CONSTRUCTION under perturbed partitioning is gated
+            // separately by the re-derivation pass after this loop
             // (r14 — see the artifact-construction block below). Model fits
             // remain registry-gated (fixed seeds + disk-roundtrip specs).
             // hash-oracled queries must be BIT-stable (the driver hashes

@@ -3,7 +3,7 @@ package graft.multimodal
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.sources.Tables
-import graft.ops.MemoHygiene.PersistSyntax._
+import graft.ops.Artifacts.PersistSyntax._
 
 /** A decoded media asset's typed metadata. The decode itself is STUBBED —
   * no image/audio codecs exist in this environment — but deterministic, so

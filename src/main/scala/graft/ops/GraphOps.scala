@@ -3,7 +3,7 @@ package graft.ops
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.sources.Tables
-import graft.ops.MemoHygiene.PersistSyntax._
+import graft.ops.Artifacts.PersistSyntax._
 
 /** Graph analytics over the co-purchase graph (parts linked when they share
   * an order — the classic market-basket projection of `lineitem`).
@@ -42,42 +42,23 @@ object GraphOps {
     Tables.parquet(spark, s"$dir/edges")
   }
 
-  /** Session-lifetime memo of the PERSISTED edge scan per (context, sf,
-    * gate confs) — the `tokenRelations`/`embProjection` discipline's
-    * application to the graph family (r18 verdict #1): [[graphMetrics]]
-    * and [[trianglesKeyOriented]] each persisted [[edges]]' scan per call
-    * (the same logical plan, so repeat calls tripped CacheManager's
-    * "already cached" warning and parked duplicate registrations). One
-    * standing entry per key; the iteration-internal persists of DERIVED
-    * frames (both-ways unions, vote edges) keep their per-call
-    * persist/unpersist pairing — those are parameterized intermediates
-    * with explicit cleanup, not this class. */
-  private val edgeRelations =
-    new java.util.concurrent.ConcurrentHashMap[String, DataFrame]()
-
-  MemoHygiene.register { appId =>
-    MemoHygiene.evictByApp(edgeRelations, appId)
-  }
-
+  /** The PERSISTED edge scan (and its degree-oriented derivative) per
+    * (context, sf, gate confs) — a session artifact
+    * ([[Artifacts.session]]), the token-relation / [[VectorOps.embProjection]]
+    * discipline's application to the graph family (r18 verdict #1):
+    * [[graphMetrics]] and [[trianglesKeyOriented]] each persisted [[edges]]'
+    * scan per call (the same logical plan, so repeat calls tripped
+    * CacheManager's "already cached" warning and parked duplicate
+    * registrations). The iteration-internal persists of DERIVED frames
+    * (both-ways unions, vote edges) keep their per-call persist/unpersist
+    * pairing — those are parameterized intermediates with explicit
+    * cleanup, not this class. */
   private def graphRelation(spark: SparkSession, sf: String, kind: String)(
-      build: => DataFrame): DataFrame = {
-    MemoHygiene.install(spark)
-    val sp = spark.conf.get("spark.sql.shuffle.partitions")
-    val mpb = spark.conf.get("spark.sql.files.maxPartitionBytes")
-    val key = s"${spark.sparkContext.applicationId}|$sf|$kind|$sp|$mpb"
-    val e = edgeRelations.computeIfAbsent(key, _ => build)
-    // (re-)register the cache on every lookup: Bench/Verify clearCache()
-    // between queries would otherwise quietly drop the sharing
-    if (e.storageLevel == org.apache.spark.storage.StorageLevel.NONE) e.persist()
-    e
-  }
+      build: => DataFrame): DataFrame =
+    Artifacts.session(spark, "graph", sf, kind)(build).persistOnce()
 
   private def edgeRelation(spark: SparkSession, sf: String): DataFrame =
     graphRelation(spark, sf, "edges")(edges(spark, sf))
-
-  /** Entry count of this object's context-bound memos — the teardown
-    * spec's seam ([[MemoHygiene]]). */
-  private[graft] def memoEntryCount: Int = edgeRelations.size
 
   /** Market-basket pair mining — the top co-purchased part pairs by number
     * of distinct orders containing both (distinct, so a part repeated
@@ -145,7 +126,7 @@ object GraphOps {
     * machine): the per-round state shuffles are edge/node-sized — a few
     * tens of MB at bench scale — and at the session's full shuffle width
     * every round pays map+reduce TASK DISPATCH far out of proportion to
-    * its bytes (measured in IterRepro on a synthetic 2.4M-row undDeg:
+    * its bytes (measured on a synthetic 2.4M-row undDeg:
     * 0.75 s/round at width 32 vs 0.22-0.26 s at width 4-8 on the same
     * data). Width = rows × ~24 B over a 4 MB/task target, capped at the
     * configured width — a 100 TB edge list saturates the cap, so a

@@ -192,25 +192,17 @@ object Scoring {
       .select(col("customer_id") +: onehotCols.map { case (out, _, _) => col(out) }: _*)
       .orderBy("customer_id")
 
-  /** Model registry: one fitted model per dataset, memoized in-JVM AND
-    * persisted under target/models — a deployment trains once and scores
+  /** Model registry: one fitted model per dataset, a model artifact
+    * ([[Artifacts.fitOrLoad]]) — a deployment trains once and scores
     * many times (the reference itself ships a pre-fitted `best_model.pkl`);
     * retraining on every invocation would misrepresent the scoring cost.
     * Training is fully deterministic (seed + single-partition input), so a
     * cached artifact is interchangeable with a fresh fit. */
-  private val modelCache =
-    new java.util.concurrent.ConcurrentHashMap[String, GBTClassificationModel]()
-
   private def fitOrLoad(spark: SparkSession, sf: String,
                         train: => DataFrame): GBTClassificationModel =
-    modelCache.computeIfAbsent(sf, _ => {
-      val dir = s"target/models/gbt-${sf.replaceAll("[^A-Za-z0-9.]", "_")}"
-      scala.util.Try(GBTClassificationModel.load(dir)).getOrElse {
-        val m = trainModel(train)
-        scala.util.Try(m.write.overwrite().save(dir))
-        m
-      }
-    })
+    Artifacts.fitOrLoad[GBTClassificationModel](Artifacts.modelFile("gbt-", sf))(
+      load = p => GBTClassificationModel.load(p.toString),
+      save = (m, p) => m.write.save(p.toString))(trainModel(train))
 
   /** Pre-populate the per-dataset model cache (fit or disk-load) without
     * scoring — Bench calls this untimed so q_score_batch measures scoring

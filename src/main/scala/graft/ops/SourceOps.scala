@@ -19,23 +19,10 @@ import graft.sources.Tables
   */
 object SourceOps {
 
-  /** Round-trip staging dirs, memoized per (format, sf) for the life of the
-    * JVM: the *write* half of a round-trip is setup, not the measured query
-    * — Bench pre-materializes these untimed (VERDICT r2 §perf) and the timed
-    * region then measures read→agg only. Verify still writes on first call,
-    * so correctness coverage of the write path is unchanged. */
-  private val staged =
-    new java.util.concurrent.ConcurrentHashMap[String, java.util.concurrent.FutureTask[String]]()
-
-  /** Keys the current THREAD is mid-construction on — the cycle detector
-    * for nested [[materialize]] calls (see the guard in materialize). */
-  private val building: ThreadLocal[java.util.HashSet[String]] =
-    ThreadLocal.withInitial(() => new java.util.HashSet[String]())
-
   /** Number of staging dirs materialized so far — Bench snapshots this
     * around each timed query to detect a materialize user missing from
     * [[stagedQueries]] (a staging write inside a timed region). */
-  def stagedKeyCount: Int = staged.size()
+  def stagedKeyCount: Int = Artifacts.stagedKeyCount
 
   /** Declared queries whose construction stages a one-time [[materialize]]
     * write. Owned HERE, next to materialize, so adding a new staging user
@@ -131,62 +118,20 @@ object SourceOps {
     // and its node-count guard probe, both one-time
     "q_khop")
 
-  private[graft] def materialize(key: String)(write: String => Unit): String = {
-    // NOT computeIfAbsent: artifact writers NEST materialize calls (the
-    // eigen ladder's rung k stages on top of rungs 1..k-1 and the cov
-    // matrix; lex_df_maint_ on top of lex_df_), and a nested
-    // computeIfAbsent on the SAME ConcurrentHashMap throws
-    // IllegalStateException("Recursive update") whenever the two keys
-    // land in one hash bin — bin-layout-dependent, so it surfaces only
-    // when an unlucky key set shifts the map's internal state (first hit:
-    // the round-16 Plans dump, q_pca_k3 after the lex_postings_ keys
-    // landed). putIfAbsent + running the winner's task OUTSIDE the map
-    // operation keeps the same winner-builds/losers-wait semantics while
-    // making nested staging of DIFFERENT keys safe at any bin layout
-    // (the staging graph is a DAG, so a key can never await itself).
-    val task = new java.util.concurrent.FutureTask[String](() => {
-      val prefix = "graft_" + key.replaceAll("[^A-Za-z0-9._-]", "_")
-      val tmp = Files.createTempDirectory(prefix).toString
-      // record the winning writer so Verify's --stability gate can
-      // RE-DERIVE the artifact under perturbed partitioning (see
-      // [[rederivableArtifacts]]) — construction determinism as a class,
-      // not per-artifact specs only (r13 verdict #5). Only the pure
-      // artifacts are recorded: closures capture persisted frames and
-      // models, and pinning every staging fixture's scope for the JVM's
-      // lifetime would tax Bench/test sessions that never run the gate.
-      if (pureArtifactPrefixes.exists(key.startsWith)) writers.put(key, write)
-      write(tmp)
-      tmp
-    })
-    // a writer that transitively re-stages its OWN key (a cycle in the
-    // staging DAG) would block forever in winner.get() on its own
-    // incomplete task — keep same-key re-entry fail-fast, like the
-    // "Recursive update" computeIfAbsent threw, instead of a silent hang
-    // (r16 review). Tracked per THREAD: another thread building the same
-    // key is the normal winner/waiter case, not a cycle.
-    require(!building.get().contains(key),
-      s"materialize cycle: '$key' is already under construction by this thread")
-    val prior = staged.putIfAbsent(key, task)
-    val winner = if (prior == null) {
-      building.get().add(key)
-      try task.run() finally building.get().remove(key)
-      task
-    } else prior
-    try winner.get()
-    catch {
-      case e: java.util.concurrent.ExecutionException =>
-        // a failed construction must not poison the memo (computeIfAbsent
-        // left no entry on failure — keep that retry semantic), and
-        // callers should see the writer's own exception, not the wrapper
-        staged.remove(key, winner)
-        throw e.getCause
-    }
-  }
-
-  /** The construction closure that built each staged artifact this JVM —
-    * exactly the one whose output the registry serves (first caller wins,
-    * same as [[materialize]]'s memoization). */
-  private val writers = new java.util.concurrent.ConcurrentHashMap[String, String => Unit]()
+  /** Round-trip staging dirs, memoized per key for the life of the JVM
+    * ([[Artifacts.stage]]): the *write* half of a round-trip is setup, not
+    * the measured query — Bench pre-materializes these untimed (VERDICT r2
+    * §perf) and the timed region then measures read→agg only. Verify still
+    * writes on first call, so correctness coverage of the write path is
+    * unchanged. Writers may nest (the eigen ladder's rung k stages on top
+    * of rungs 1..k-1; lex_df_maint_ on top of lex_df_). The writer of a
+    * pure artifact is recorded so Verify's --stability gate can RE-DERIVE
+    * it under perturbed partitioning ([[rederivableArtifacts]]); the other
+    * closures capture persisted frames and models, and pinning every
+    * staging fixture's scope for the JVM's lifetime would tax Bench/test
+    * sessions that never run the gate. */
+  private[graft] def materialize(key: String)(write: String => Unit): String =
+    Artifacts.stage(key, pureArtifactPrefixes.exists(key.startsWith))(write)
 
   /** Registry keys (by prefix) whose artifacts are PURE functions of the
     * corpus — given the frozen model registry (KMeans cells, PQ codebooks,
@@ -211,21 +156,10 @@ object SourceOps {
 
   /** key → (standing dir, recorded writer) for every staged artifact the
     * stability gate should re-derive — the pure-artifact subset of
-    * whatever this session actually materialized. */
-  private[graft] def rederivableArtifacts: Map[String, (String, String => Unit)] = {
-    import scala.jdk.CollectionConverters._
-    staged.asScala.flatMap { case (k, task) =>
-      Option(writers.get(k))
-        .filter(_ => pureArtifactPrefixes.exists(k.startsWith) && task.isDone)
-        // isDone is also true for a task that completed EXCEPTIONALLY —
-        // in the window before the failing materialize caller removes the
-        // entry (or if that thread died before its catch), get() would
-        // throw ExecutionException out of the stability gate's
-        // enumeration. A failed construction has no artifact to
-        // re-derive; skip it (r16 advisor #2).
-        .flatMap(w => scala.util.Try(task.get()).toOption.map(d => k -> (d, w)))
-    }.toMap
-  }
+    * whatever this session actually materialized, each with exactly the
+    * writer whose output the registry serves (first caller wins). */
+  private[graft] def rederivableArtifacts: Map[String, (String, String => Unit)] =
+    Artifacts.recordedStages
 
   /** The day-partitioned events layout, staged once per sf — shared by
     * [[partitionPrune]] (static pruning) and

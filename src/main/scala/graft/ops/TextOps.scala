@@ -3,7 +3,7 @@ package graft.ops
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.sources.Tables
-import graft.ops.MemoHygiene.PersistSyntax._
+import graft.ops.Artifacts.PersistSyntax._
 
 /** Text / LLM-training-data operators over the `documents` table
   * (SURVEY.md §2.9 X1/X2/X4): dedup (exact, near-dup Jaccard, MinHash-LSH,
@@ -262,66 +262,33 @@ object TextOps {
     * Near-dup components are tiny cliques in practice, so this converges in
     * 2 rounds; the 20-round cap is a safety bound that now covers diameters
     * up to ~2^20. The edge list is persisted once and the labels are
-    * `localCheckpoint`ed every [[ClusterCheckpointEvery]] rounds so lineage
-    * stays bounded on a high-diameter graph.
-    * Cluster id = min doc_id of the component = the canonical doc to keep. */
-  def dupClusters(spark: SparkSession, sf: String): DataFrame = {
-    // install BEFORE populating: a session whose only memo-populating
-    // queries are the dup-cluster family must still arm the teardown
-    // (r18 advisor #1 — previously only the other getters installed it)
-    MemoHygiene.install(spark)
-    clusterCache.computeIfAbsent(
-        s"${spark.sparkContext.applicationId}|$sf/exact", _ =>
+    * `localCheckpoint`ed every unconverged round so lineage stays bounded
+    * on a high-diameter graph.
+    * Cluster id = min doc_id of the component = the canonical doc to keep.
+    *
+    * The finished CLUSTER TABLE (doc_id, cluster) is a session artifact
+    * ([[Artifacts.session]]): the components fixpoint is the expensive
+    * iterative step, and each of its FOUR consumers (q_dup_clusters,
+    * q_dedup_canonical and their LSH twins) used to re-run it from the
+    * pair graph up (verdict r8 #2); one context now pays each variant's
+    * fixpoint once. The table is tiny — near-dup members only — and
+    * `localCheckpoint`ed, so the store holds a flat scan, not a lineage
+    * tree, and it survives catalog `clearCache`. */
+  def dupClusters(spark: SparkSession, sf: String): DataFrame =
+    Artifacts.session(spark, "dupClusters", sf, "exact")(
       dupClustersFrom(dedupJaccard(spark, sf).select("id_a", "id_b"))
         .localCheckpoint())
       .orderBy("doc_id")
-  }
 
   /** Same clustering over the MinHash-LSH candidate pairs — the composed
     * 100 TB path (banded candidates → exact verify → components), declared
     * no-oracle like its pair source; TextOpsSpec asserts cluster equality
     * with the exact form on the fixture. */
-  def dupClustersLsh(spark: SparkSession, sf: String): DataFrame = {
-    MemoHygiene.install(spark)
-    clusterCache.computeIfAbsent(
-        s"${spark.sparkContext.applicationId}|$sf/lsh", _ =>
+  def dupClustersLsh(spark: SparkSession, sf: String): DataFrame =
+    Artifacts.session(spark, "dupClusters", sf, "lsh")(
       dupClustersFrom(dedupMinhash(spark, sf).select("id_a", "id_b"))
         .localCheckpoint())
       .orderBy("doc_id")
-  }
-
-  /** Per-corpus memo of the finished CLUSTER TABLE (doc_id, cluster). The
-    * components fixpoint is the expensive iterative step, and each of its
-    * FOUR consumers (q_dup_clusters, q_dedup_canonical and their LSH twins)
-    * used to re-run it from the pair graph up (verdict r8 #2); one JVM now
-    * pays each variant's fixpoint once. The table is tiny — near-dup
-    * members only — and `localCheckpoint`ed, so the memo holds a flat
-    * scan, not a lineage tree, and survives catalog `clearCache`. Same
-    * session-lifetime contract (and the same first-consumer-pays timing
-    * asymmetry, noted in PLANS.md) as [[bpeMergeCache]]. Keyed by
-    * applicationId (r18 advisor #1): checkpoint blocks die with their
-    * context, so a recreated session in the same JVM must rebuild, never
-    * read a dead context's frames — the same rationale as the chain
-    * memos, enforced here by the key even before the teardown fires. */
-  private val clusterCache =
-    new java.util.concurrent.ConcurrentHashMap[String, DataFrame]()
-
-  /** Truncate label lineage every this many propagation rounds (default:
-    * every round). With the pointer jump, each un-checkpointed round
-    * QUADRUPLES the logical plan (the jump self-join references prop twice,
-    * and prop references labels twice) — profiled as pure driver-side
-    * analysis time, ~13 s at sf0.1 when left to grow. `localCheckpoint`
-    * materializes the labels (a tiny table: near-dup members only) and cuts
-    * the chain; measured cost of checkpointing every round: none (the r7
-    * A/B in PLANS.md). Env-overridable (GRAFT_CLUSTER_CKPT_EVERY) so a
-    * profile run can A/B the checkpoint path without a rebuild. */
-  private[graft] val ClusterCheckpointEvery =
-    // clamp + swallow malformed values: an unguarded toInt here runs in the
-    // object initializer, so a typo'd profiling knob would poison EVERY
-    // TextOps query with ExceptionInInitializerError, and 0 would divide
-    // by zero inside the cluster loop
-    scala.util.Try(sys.env.getOrElse("GRAFT_CLUSTER_CKPT_EVERY", "1").toInt)
-      .toOption.filter(_ >= 1).getOrElse(1)
 
   /** Rounds the last [[dupClustersFrom]] call took (diagnostics + the
     * round-count assertion in TextOpsSpec's chain test). */
@@ -376,7 +343,13 @@ object TextOps {
       prop.unpersist()
       cached.unpersist()
       iter += 1
-      if (!converged && iter % ClusterCheckpointEvery == 0) {
+      // truncate label lineage every unconverged round: with the pointer
+      // jump each un-checkpointed round QUADRUPLES the logical plan (the
+      // jump self-join references prop twice, and prop references labels
+      // twice) — profiled as ~13 s of driver-side analysis at sf0.1 when
+      // left to grow; checkpointing every round measured no cost (r7 A/B
+      // in PLANS.md)
+      if (!converged) {
         val snap = next.select("v", "cluster").localCheckpoint() // eager; cuts lineage
         next.unpersist()
         cached = snap
@@ -931,42 +904,34 @@ object TextOps {
     merges.toDF("rank", "pair", "weight").orderBy("rank")
   }
 
-  /** Per-corpus memo of the learned merge sequence, in-JVM AND persisted
-    * under target/models (round 11 — the Scoring-GBT / VectorOps-PQ
-    * registry discipline): the trainer is deterministic on a fixed corpus,
-    * and a tokenizer's merge table is precisely the artifact a real
-    * pipeline trains once and ships, so a fresh JVM disk-loads instead of
-    * paying the ~8 s sequential retrain inside whichever query runs
-    * first. Tab-separated (rank, pair, weight) lines — the pair itself
-    * contains the space. */
-  private val bpeMergeCache =
-    new java.util.concurrent.ConcurrentHashMap[String, Seq[(Long, String, Long)]]()
-
   /** Fit-or-load the full merge table for `sf` — shared by the trainer
-    * query ([[bpeMerges]]) and the encoder ([[bpeEncode]]). */
-  private def mergesFor(spark: SparkSession, sf: String): Seq[(Long, String, Long)] =
-    bpeMergeCache.computeIfAbsent(sf, _ => {
-      import java.nio.file.{Files, Paths}
-      import scala.jdk.CollectionConverters._
-      val path = Paths.get(s"target/models/bpe-${sf.replaceAll("[^A-Za-z0-9.]", "_")}.tsv")
-      def load(): Option[Seq[(Long, String, Long)]] = scala.util.Try {
+    * query ([[bpeMerges]]) and the encoder ([[bpeEncode]]). A model
+    * artifact ([[Artifacts.fitOrLoad]], round 11 — the Scoring-GBT /
+    * VectorOps-PQ registry discipline): the trainer is deterministic on a
+    * fixed corpus, and a tokenizer's merge table is precisely the artifact
+    * a real pipeline trains once and ships, so a fresh JVM disk-loads
+    * instead of paying the ~8 s sequential retrain inside whichever query
+    * runs first. Tab-separated (rank, pair, weight) lines — the pair
+    * itself contains the space. */
+  private def mergesFor(spark: SparkSession, sf: String): Seq[(Long, String, Long)] = {
+    import java.nio.file.Files
+    import scala.jdk.CollectionConverters._
+    Artifacts.fitOrLoad[Seq[(Long, String, Long)]](Artifacts.modelFile("bpe-", sf, ".tsv"))(
+      load = path => {
         val rows = Files.readAllLines(path).asScala.filter(_.nonEmpty).map { line =>
           val f = line.split("\t", -1)
           (f(0).toLong, f(1), f(2).toLong)
         }.toSeq
         require(rows.nonEmpty)
         rows
-      }.toOption
-      load().getOrElse {
-        val (merges, words) = bpeTrain(fannedDocs(spark, sf))
-        words.unpersist()
-        scala.util.Try {
-          Files.createDirectories(path.getParent)
-          Files.write(path, merges.map { case (r, p, w) => s"$r\t$p\t$w" }.asJava)
-        }
-        merges
-      }
-    })
+      },
+      save = (merges, path) =>
+        Files.write(path, merges.map { case (r, p, w) => s"$r\t$p\t$w" }.asJava)) {
+      val (merges, words) = bpeTrain(fannedDocs(spark, sf))
+      words.unpersist()
+      merges
+    }
+  }
 
   /** Pre-populate the per-corpus merge-table cache (train or disk-load)
     * without running a query — Bench calls this untimed (the warmModel /
@@ -1547,96 +1512,43 @@ object TextOps {
     bm25Score(tf, dfq, docLen, stats)
   }
 
-  /** Session-lifetime memo of the PERSISTED exploded token relation per
-    * (context, sf, corpus predicate, gate confs) — the chain-memo
-    * discipline ([[VectorOps]] lifecycle/moment chains) applied to the
-    * BM25 recount forms' shared explode (r16 advisor #1): the persist
-    * exists to share one tokenization across [[bm25From]]'s three
-    * aggregates, but per-invocation persists parked a fresh corpus-sized
-    * cache registration per bm25/bm25Store/lexLifecycle call (CacheManager
+  /** The PERSISTED exploded token relation per (context, sf, corpus
+    * predicate, gate confs) — a session artifact ([[Artifacts.session]])
+    * for the BM25 recount forms' shared explode (r16 advisor #1): the
+    * persist exists to share one tokenization across [[bm25From]]'s three
+    * aggregates (without it the explode would inline 3× into one scoring
+    * plan), but per-invocation persists parked a fresh corpus-sized cache
+    * registration per bm25/bm25Store/lexLifecycle call (CacheManager
     * plan-dedup bounded the memory, yet the sharing was implicit and the
     * registrations grew). One explicit standing entry per distinct corpus
-    * view — exactly two exist (full + lexLifecycle's post-erasure) — and
-    * the key's applicationId/conf fields carry the same rationale as the
-    * chain memos: a recreated session or the perturbed stability gate
-    * builds its own, never reads frames bound to a dead context or a
-    * different partitioning. */
-  private val tokenRelations =
-    new java.util.concurrent.ConcurrentHashMap[String, DataFrame]()
-
-  /** Session-lifetime memo of the PERSISTED dedup base relations per
-    * (context, sf, kind, gate confs) — the [[tokenRelations]] /
-    * [[VectorOps.embProjection]] discipline's third application (r18
-    * verdict #1, closing the last per-call-persist class): the persist
-    * exists to share one shingle (or k-gram) relation across a query's
-    * probe + candidate + verify arms, but the prod entry points
-    * ([[dedupJaccard]]/[[dedupPrefix]]/[[dedupMinhash]]/[[dedupNgram]]/
-    * [[decontaminate]]/[[dedupIncremental]]) each parked a fresh
-    * corpus-sized cache registration per call (the suite log's "Asked to
-    * cache already cached data" warnings). One explicit standing entry
-    * per key; the parameterized `From` seams stay memo-free — a caller
-    * frame has no honest key (the dedupCosineLshFrom note, PLANS r18). */
-  private val dedupRelations =
-    new java.util.concurrent.ConcurrentHashMap[String, DataFrame]()
-
-  private def dedupRelation(spark: SparkSession, sf: String, kind: String)(
-      build: => DataFrame): DataFrame = {
-    MemoHygiene.install(spark)
-    val sp = spark.conf.get("spark.sql.shuffle.partitions")
-    val mpb = spark.conf.get("spark.sql.files.maxPartitionBytes")
-    val key = s"${spark.sparkContext.applicationId}|$sf|$kind|$sp|$mpb"
-    val r = dedupRelations.computeIfAbsent(key, _ => build)
-    // (re-)register the cache on every lookup: Bench/Verify clearCache()
-    // between queries, and an evicted entry would otherwise quietly lose
-    // the intra-query sharing the relation exists for
-    if (r.storageLevel == org.apache.spark.storage.StorageLevel.NONE) r.persist()
-    r
-  }
-
-  /** The memoized persisted (doc_id, s) shingle relation — what the
-    * near-dup prod entry points share instead of per-call persists. */
-  private[graft] def shingleRelation(spark: SparkSession, sf: String): DataFrame =
-    dedupRelation(spark, sf, "shingle")(shingleRows(spark, sf))
-
-  /** The memoized persisted (doc_id, g) k-gram relation ([[dedupNgram]]). */
-  private[graft] def kgramRelation(spark: SparkSession, sf: String): DataFrame =
-    dedupRelation(spark, sf, "kgram")(kgramRowsOf(fannedDocs(spark, sf)))
-
-  /** Session-stop teardown (r17 verdict #5): the stopping context's token
-    * and dedup base relations unpersist + evict; the cluster memo —
-    * holding localCheckpoint'ed frames bound to whichever context built
-    * them — drops whole (nothing to unpersist: checkpoint blocks die with
-    * their context). */
-  MemoHygiene.register { appId =>
-    MemoHygiene.evictByApp(tokenRelations, appId)
-    MemoHygiene.evictByApp(dedupRelations, appId)
-    clusterCache.clear()
-  }
-
+    * view — exactly two exist (full + lexLifecycle's post-erasure). */
   private def tokenRelation(spark: SparkSession, sf: String,
-      corpusPred: Option[Column]): DataFrame = {
-    MemoHygiene.install(spark)
-    val sp = spark.conf.get("spark.sql.shuffle.partitions")
-    val mpb = spark.conf.get("spark.sql.files.maxPartitionBytes")
-    val pred = corpusPred.map(_.toString).getOrElse("all")
-    val key = s"${spark.sparkContext.applicationId}|$sf|$pred|$sp|$mpb"
-    val tk = tokenRelations.computeIfAbsent(key, _ => {
+      corpusPred: Option[Column]): DataFrame =
+    Artifacts.session(spark, "tokens", sf, corpusPred.map(_.toString).getOrElse("all")) {
       val docs = fannedDocs(spark, sf)
       corpusPred.fold(docs)(docs.filter)
         .select(col("doc_id"), explode(tokens(col("text"))).as("tok"))
-    })
-    // (re-)register the cache on every lookup: Bench/Verify clearCache()
-    // between queries, and an evicted entry would otherwise quietly lose
-    // the intra-query sharing the relation exists for (the explode would
-    // inline 3× into one scoring plan)
-    if (tk.storageLevel == org.apache.spark.storage.StorageLevel.NONE) tk.persist()
-    tk
-  }
+    }.persistOnce()
 
-  /** Entry count of this object's context-bound memos — the teardown
-    * spec's seam ([[MemoHygiene]]). */
-  private[graft] def memoEntryCount: Int =
-    tokenRelations.size + dedupRelations.size + clusterCache.size
+  /** The PERSISTED (doc_id, s) shingle relation per (context, sf, gate
+    * confs) — the [[tokenRelation]] / [[VectorOps.embProjection]]
+    * discipline's third application (r18 verdict #1, closing the last
+    * per-call-persist class): the persist exists to share one shingle
+    * relation across a query's probe + candidate + verify arms, but the
+    * prod entry points ([[dedupJaccard]]/[[dedupPrefix]]/[[dedupMinhash]]/
+    * [[decontaminate]]/[[dedupIncremental]]) each parked a fresh
+    * corpus-sized cache registration per call (the suite log's "Asked to
+    * cache already cached data" warnings). The parameterized `From` seams
+    * stay memo-free — a caller frame has no honest key (the
+    * dedupCosineLshFrom note, PLANS r18). */
+  private[graft] def shingleRelation(spark: SparkSession, sf: String): DataFrame =
+    Artifacts.session(spark, "dedup", sf, "shingle")(shingleRows(spark, sf)).persistOnce()
+
+  /** The persisted (doc_id, g) k-gram relation ([[dedupNgram]]), stored
+    * like [[shingleRelation]]. */
+  private[graft] def kgramRelation(spark: SparkSession, sf: String): DataFrame =
+    Artifacts.session(spark, "dedup", sf, "kgram")(kgramRowsOf(fannedDocs(spark, sf)))
+      .persistOnce()
 
   /** The ONE BM25 scoring tail over prepared relations — shared by every
     * BM25 form ([[bm25From]]'s scan-derived relations and [[bm25Index]]'s

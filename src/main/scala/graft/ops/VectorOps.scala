@@ -4,7 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 import graft.sources.Tables
-import graft.ops.MemoHygiene.PersistSyntax._
+import graft.ops.Artifacts.PersistSyntax._
 
 /** Embedding / similarity-search operators over the `embeddings` table
   * (`vec_id, embedding: array<float> (64), label`) — SURVEY.md §2.9 X3/X7.
@@ -401,29 +401,22 @@ object VectorOps {
     * distribution where sign-LSH uses data-independent hyperplanes. At
     * 100 TB the quantizer trains on a sample, cells become partition keys,
     * and a probe touches nprobe/k of the corpus. */
-  /** Quantizer registry — like Scoring's GBT registry: deterministic fit
-    * (fixed seed), memoized in-JVM and persisted under target/models so
-    * Verify/Bench sessions share one artifact. */
-  private val kmCache = new java.util.concurrent.ConcurrentHashMap[
-    String, org.apache.spark.ml.clustering.KMeansModel]()
-
   /** Fit-or-load the k-cell coarse quantizer for `sf` (expects an `fv`
     * vector column). Shared by [[ivfTopk]] and [[semDedup]] so both see the
-    * SAME cells for a given (sf, k). */
+    * SAME cells for a given (sf, k). A model artifact like Scoring's GBT
+    * ([[Artifacts.fitOrLoad]]): deterministic fit (fixed seed), so
+    * Verify/Bench sessions share one artifact. */
   private[graft] def coarseQuantizer(sf: String, k: Int, emb: DataFrame)
       : org.apache.spark.ml.clustering.KMeansModel = {
     import org.apache.spark.ml.clustering.{KMeans, KMeansModel}
-    kmCache.computeIfAbsent(s"$sf/$k", _ => {
-      val dir = s"target/models/ivf$k-${sf.replaceAll("[^A-Za-z0-9.]", "_")}"
-      scala.util.Try(KMeansModel.load(dir)).getOrElse {
-        // a coarse quantizer only buckets — 5 iterations is plenty;
-        // seed keeps it deterministic
-        val m = new KMeans().setK(k).setSeed(42L).setMaxIter(5)
-          .setFeaturesCol("fv").setPredictionCol("cell").fit(emb)
-        scala.util.Try(m.write.overwrite().save(dir))
-        m
-      }
-    })
+    Artifacts.fitOrLoad[KMeansModel](Artifacts.modelFile(s"ivf$k-", sf))(
+      load = p => KMeansModel.load(p.toString),
+      save = (m, p) => m.write.save(p.toString)) {
+      // a coarse quantizer only buckets — 5 iterations is plenty;
+      // seed keeps it deterministic
+      new KMeans().setK(k).setSeed(42L).setMaxIter(5)
+        .setFeaturesCol("fv").setPredictionCol("cell").fit(emb)
+    }
   }
 
   def ivfTopk(spark: SparkSession, sf: String, k: Int = 16, nprobe: Int = 2): DataFrame = {
@@ -486,7 +479,7 @@ object VectorOps {
   val PqSubDim = 8
   val PqCodes = 16
 
-  /** Codebook memo, in-JVM AND persisted under target/models (the
+  /** The codebooks are a model artifact ([[Artifacts.fitOrLoad]], the
     * [[coarseQuantizer]] / Scoring GBT registry discipline): fixed seeds +
     * fixed data ⇒ the nine k-means fits are deterministic, but they are a
     * ONE-TIME index build — ~8 s at sf0.1 — and letting a fresh JVM (the
@@ -494,11 +487,9 @@ object VectorOps {
     * reports the build, not the compressed-domain scan a PQ index exists to
     * amortize (round-10 review). The codebooks derive from the CANONICAL
     * embeddings table for `sf` (resolved internally — the cache key is
-    * honest; no caller-supplied frame can desync it). */
-  private val pqCache = new java.util.concurrent.ConcurrentHashMap[
-    String, Array[Array[Array[Double]]]]()
-
-  /** Fit-or-load the per-subspace PQ codebooks: [subspace][code][dim].
+    * honest; no caller-supplied frame can desync it).
+    *
+    * Fit-or-load the per-subspace PQ codebooks: [subspace][code][dim].
     * Disk format: one line per (subspace, code) — `s c d1 d2 ... d8` with
     * full `Double.toString` precision, so a reload is bit-identical. */
   private[graft] def pqCodebooks(spark: SparkSession, sf: String): Array[Array[Array[Double]]] =
@@ -511,12 +502,11 @@ object VectorOps {
     * (the r10 lesson): every caller derives `key`'s corpus deterministically
     * from `key` itself (canonical table for `sf`, or the fixed vec_id
     * partition for `sf-c80`), so a disk reload can never desync. */
-  private[graft] def pqCodebooksFrom(key: String, corpus: DataFrame): Array[Array[Array[Double]]] =
-    pqCache.computeIfAbsent(key, _ => {
-      import java.nio.file.{Files, Paths}
-      import scala.jdk.CollectionConverters._
-      val path = Paths.get(s"target/models/pq-${key.replaceAll("[^A-Za-z0-9.]", "_")}.txt")
-      def load(): Option[Array[Array[Array[Double]]]] = scala.util.Try {
+  private[graft] def pqCodebooksFrom(key: String, corpus: DataFrame): Array[Array[Array[Double]]] = {
+    import java.nio.file.Files
+    import scala.jdk.CollectionConverters._
+    Artifacts.fitOrLoad[Array[Array[Array[Double]]]](Artifacts.modelFile("pq-", key, ".txt"))(
+      load = path => {
         val rows = Files.readAllLines(path).asScala.filter(_.nonEmpty).map { line =>
           val f = line.trim.split("\\s+")
           (f(0).toInt, f(1).toInt, f.drop(2).map(_.toDouble))
@@ -525,29 +515,23 @@ object VectorOps {
         rows.foreach { case (s, c, cent) => books(s)(c) = cent }
         require(books.forall(_.forall(c => c != null && c.length == PqSubDim)))
         books
-      }.toOption
-      def fit(): Array[Array[Array[Double]]] = {
-        import org.apache.spark.ml.clustering.KMeans
-        import org.apache.spark.ml.functions.array_to_vector
-        (0 until PqSubspaces).map { s =>
-          val sub = corpus.select(
-            array_to_vector(slice(col("v"), s * PqSubDim + 1, PqSubDim)).as("fv"))
-          new KMeans().setK(PqCodes).setSeed(42L + s).setMaxIter(5)
-            .setFeaturesCol("fv").setPredictionCol("c").fit(sub)
-            .clusterCenters.map(_.toArray)
-        }.toArray
-      }
-      load().getOrElse {
-        val books = fit()
-        scala.util.Try {
-          Files.createDirectories(path.getParent)
-          val lines = for (s <- books.indices; c <- books(s).indices)
-            yield s"$s $c ${books(s)(c).mkString(" ")}"
-          Files.write(path, lines.asJava)
-        }
-        books
-      }
-    })
+      },
+      save = (books, path) => {
+        val lines = for (s <- books.indices; c <- books(s).indices)
+          yield s"$s $c ${books(s)(c).mkString(" ")}"
+        Files.write(path, lines.asJava)
+      }) {
+      import org.apache.spark.ml.clustering.KMeans
+      import org.apache.spark.ml.functions.array_to_vector
+      (0 until PqSubspaces).map { s =>
+        val sub = corpus.select(
+          array_to_vector(slice(col("v"), s * PqSubDim + 1, PqSubDim)).as("fv"))
+        new KMeans().setK(PqCodes).setSeed(42L + s).setMaxIter(5)
+          .setFeaturesCol("fv").setPredictionCol("c").fit(sub)
+          .clusterCenters.map(_.toArray)
+      }.toArray
+    }
+  }
 
   /** Pre-build every ANN index artifact for `sf` (coarse quantizer + PQ
     * codebooks), fit-or-disk-load — Bench calls this untimed so q_ann_pq /
@@ -922,91 +906,34 @@ object VectorOps {
       probes: DataFrame, km: org.apache.spark.ml.clustering.KMeansModel,
       codebook: DataFrame)
 
-  /** Memo key for the in-memory chain caches: sf PLUS the two confs the
-    * stability gate perturbs — so the gate's perturbed re-run builds its
-    * own chain instead of silently reading one constructed under default
-    * partitioning (r16 review: a plain per-sf memo re-opened the r12
-    * "memoized artifacts" blind spot for the chain's construction-time
-    * decisions). Steady state still holds exactly one entry per sf; the
-    * gate adds one bounded extra per perturbed conf set. */
-  private def chainKey(spark: SparkSession, sf: String): String = {
-    // no-default get: a typed SQL conf VALIDATES an explicit default
-    // string (an empty fallback throws INVALID_CONF_VALUE), while the
-    // plain form returns the session value or the conf's own default
-    val sp = spark.conf.get("spark.sql.shuffle.partitions")
-    val mpb = spark.conf.get("spark.sql.files.maxPartitionBytes")
-    // applicationId ties the memo to the SparkContext that built the
-    // chain's persist/localCheckpoint blocks: a session stopped and
-    // recreated in the same JVM must rebuild, not read frames bound to a
-    // dead context (r16 advisor #3); stale-context entries are bounded by
-    // restarts, which no in-repo main performs mid-run
-    s"${spark.sparkContext.applicationId}|$sf|$sp|$mpb"
-  }
-
-  /** Session-lifetime memo of the PERSISTED (vec_id, v, fv) embedding
-    * projection per (context, sf, gate confs) — the
-    * [[graft.ops.TextOps]] tokenRelations discipline applied to the ANN
-    * family's shared scan (r17 verdict #1, closing the last standing
-    * instance of the per-call-persist class): the persist exists to share
-    * one embeddings projection across a query's quantizer fit, encode and
-    * probe arms, but per-invocation persists parked a fresh cache
-    * registration per annPq/annAppend/annDelete/annCompact/ivfTopk/
-    * semDedup/chain-build call (CacheManager plan-dedup bounded the
-    * memory, yet the sharing was implicit and the registrations grew —
-    * the suite log's "Asked to cache already cached data" warnings). One
-    * explicit standing entry per [[chainKey]]: a recreated session or the
-    * perturbed stability gate builds its own, never reads frames bound to
-    * a dead context or a different partitioning. */
-  private val embProjections =
-    new java.util.concurrent.ConcurrentHashMap[String, DataFrame]()
-
-  /** Session-stop teardown (r17 verdict #5): the stopping context's
-    * persisted projections unpersist + evict; the chain memos hold only
-    * plan objects + localCheckpoint'ed frames (their blocks die with the
-    * context), so eviction alone closes them. */
-  MemoHygiene.register { appId =>
-    MemoHygiene.evictByApp(embProjections, appId)
-    MemoHygiene.evictByApp(semAssignments, appId)
-    import scala.jdk.CollectionConverters._
-    Seq(lifecycleChains, momentChains).foreach { m =>
-      m.keySet.asScala.toList.foreach(m.remove)
-    }
-  }
-
+  /** The PERSISTED (vec_id, v, fv) embedding projection per (context, sf,
+    * gate confs) — a session artifact ([[Artifacts.session]]) for the ANN
+    * family's shared scan (r17 verdict #1, the [[graft.ops.TextOps]] token
+    * relation discipline): the persist exists to share one embeddings
+    * projection across a query's quantizer fit, encode and probe arms, but
+    * per-invocation persists parked a fresh cache registration per
+    * annPq/annAppend/annDelete/annCompact/ivfTopk/semDedup/chain-build
+    * call (CacheManager plan-dedup bounded the memory, yet the sharing was
+    * implicit and the registrations grew — the suite log's "Asked to cache
+    * already cached data" warnings). */
   private[graft] def embProjection(spark: SparkSession, sf: String): DataFrame = {
     import org.apache.spark.ml.functions.array_to_vector
-    MemoHygiene.install(spark)
-    val emb = embProjections.computeIfAbsent(chainKey(spark, sf), _ =>
+    Artifacts.session(spark, "embProjection", sf)(
       Tables.load(spark, sf, "embeddings")
         .select(col("vec_id"), asDouble(col("embedding")).as("v"))
-        .withColumn("fv", array_to_vector(col("v"))))
-    // (re-)register the cache on every lookup: Bench/Verify clearCache()
-    // between queries, and an evicted entry would otherwise quietly lose
-    // the intra-query sharing the projection exists for
-    if (emb.storageLevel == org.apache.spark.storage.StorageLevel.NONE) emb.persist()
-    emb
+        .withColumn("fv", array_to_vector(col("v")))).persistOnce()
   }
 
-  /** Entry count of this object's context-bound memos — the teardown
-    * spec's seam ([[MemoHygiene]]). */
-  private[graft] def memoEntryCount: Int =
-    embProjections.size + semAssignments.size +
-      lifecycleChains.size + momentChains.size
-
-  /** Session-lifetime memo of the composed chain per (sf, gate confs)
-    * (r15 advisor #4): the declared query plus the spec's two probe arms
-    * each build the chain, and every build persisted a fresh copy of the
-    * embeddings projection with no unpersist — memoizing the WHOLE chain
-    * (the staged-artifact discipline, in-memory edition) leaves one
-    * cached copy per JVM however many consumers run. */
-  private val lifecycleChains =
-    new java.util.concurrent.ConcurrentHashMap[String, LifecycleChain]()
-
-  private def lifecycleChain(spark: SparkSession, sf: String): LifecycleChain = {
-    MemoHygiene.install(spark)
-    lifecycleChains.computeIfAbsent(chainKey(spark, sf),
-      _ => buildLifecycleChain(spark, sf))
-  }
+  /** The composed chain, stored per (context, sf, gate confs) (r15
+    * advisor #4): the declared query plus the spec's two probe arms each
+    * build the chain, and every build persisted a fresh copy of the
+    * embeddings projection with no unpersist — storing the WHOLE chain
+    * leaves one cached copy per context however many consumers run. The
+    * gate confs in the key (r16 review) make the stability gate's
+    * perturbed re-run build its own chain instead of silently reading one
+    * constructed under default partitioning. */
+  private def lifecycleChain(spark: SparkSession, sf: String): LifecycleChain =
+    Artifacts.session(spark, "lifecycleChain", sf)(buildLifecycleChain(spark, sf))
 
   private def buildLifecycleChain(spark: SparkSession, sf: String): LifecycleChain = {
     val emb = embProjection(spark, sf)
@@ -1146,8 +1073,8 @@ object VectorOps {
     * never all-pairs; per-cell pair volume is (n/k)² per cell, so the
     * DECLARED k tracks the data: k = max(16, ⌈√n⌉), the paper's k≈√n
     * regime, keeping total within-cell compares at n^1.5 instead of the
-    * eventually-quadratic fixed-k form (the ScaleSmoke decade measures
-    * both). The n probe is a 1-row count on the persisted scan the
+    * eventually-quadratic fixed-k form (the round-7 scale decade in
+    * PLANS.md measures both). The n probe is a 1-row count on the persisted scan the
     * quantizer fit is about to materialize anyway — a data-dependent plan
     * choice, not a driver-side loop (ledger class: GraphOps scalars).
     * Precision is 1 (the within-cell cosine is exact); only recall is
@@ -1766,19 +1693,13 @@ object VectorOps {
   private[graft] case class MomentChain(s1: DataFrame, s2: DataFrame,
     cells: DataFrame, audit: DataFrame)
 
-  /** Memoized like [[lifecycleChain]] and for the same two reasons (r16
+  /** Stored like [[lifecycleChain]] and for the same two reasons (r16
     * review): each build eagerly localCheckpoints two 2080-row frames
     * that would otherwise accumulate per invocation (query + gate re-run
-    * + the spec's calls), and keying by [[chainKey]] keeps the stability
+    * + the spec's calls), and the gate confs in the key keep the stability
     * gate's perturbed re-run building its own chain. */
-  private val momentChains =
-    new java.util.concurrent.ConcurrentHashMap[String, MomentChain]()
-
-  private[graft] def momentChain(spark: SparkSession, sf: String): MomentChain = {
-    MemoHygiene.install(spark)
-    momentChains.computeIfAbsent(chainKey(spark, sf),
-      _ => buildMomentChain(spark, sf))
-  }
+  private[graft] def momentChain(spark: SparkSession, sf: String): MomentChain =
+    Artifacts.session(spark, "momentChain", sf)(buildMomentChain(spark, sf))
 
   private def buildMomentChain(spark: SparkSession, sf: String): MomentChain = {
     val s0 = covSumsArtifact(spark, sf)
@@ -1832,23 +1753,17 @@ object VectorOps {
       .orderBy("i")
   }
 
-  /** semDedup's persisted (vec_id, v, cell) assignment per (context, sf,
-    * confs, k) — the same keyed-memo discipline as [[embProjection]]; k
-    * joins the key because the quantizer's cell count shapes the plan. */
-  private val semAssignments =
-    new java.util.concurrent.ConcurrentHashMap[String, DataFrame]()
-
   def semDedup(spark: SparkSession, sf: String, k: Int = 0): DataFrame = {
     val emb = embProjection(spark, sf)
     val kk =
       if (k > 0) k
       else math.max(16, math.ceil(math.sqrt(emb.count().toDouble)).toInt)
     val km = coarseQuantizer(sf, kk, emb)
-    // persisted: both sides of the within-cell self-join read this
-    val assigned = semAssignments.computeIfAbsent(s"${chainKey(spark, sf)}|k=$kk",
-      _ => km.transform(emb).select(col("vec_id"), col("v"), col("cell")))
-    if (assigned.storageLevel == org.apache.spark.storage.StorageLevel.NONE)
-      assigned.persist()
+    // persisted: both sides of the within-cell self-join read this. A
+    // session artifact per (context, sf, k, gate confs), like
+    // embProjection; k joins the key because the cell count shapes the plan
+    val assigned = Artifacts.session(spark, "semAssign", sf, kk)(
+      km.transform(emb).select(col("vec_id"), col("v"), col("cell"))).persistOnce()
     // prefilter on the RAW cosine so the BigDecimal-allocating round() runs
     // on survivors only, not every within-cell pair (the mediaDedup
     // predicate split; 1e-4 slack = 2× the rounding step)

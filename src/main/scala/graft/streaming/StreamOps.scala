@@ -1109,8 +1109,8 @@ object StreamOps {
           emb.select(col("vec_id"), col("v")), km, codebook, nprobe)
         .crossJoin(broadcast(nBatches))
         .localCheckpoint() // eager — the run dir (log + ckpt) dies on exit
-      // no unpersist: emb is the session-scoped embProjection memo, owned
-      // and released by MemoHygiene / the harness clearCache
+      // no unpersist: emb is the session-scoped embProjection artifact,
+      // owned and released by Artifacts' teardown / the harness clearCache
       out
     }
   }

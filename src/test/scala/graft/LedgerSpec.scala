@@ -16,7 +16,7 @@ import scala.jdk.CollectionConverters._
   * The check is a source scan, not a plan walk, on purpose: driver actions
   * run while the operator FUNCTION builds its plan, so they are invisible
   * in the returned DataFrame's tree — the call site is the only durable
-  * evidence. Harness mains (Verify/Bench/Profile/ScaleSmoke/Plans) are out
+  * evidence. Harness mains (Verify/Bench/Profile/Plans) are out
   * of scope: running queries is their whole job.
   *
   * Justification is per-def AND per-SITE-COUNT (VERDICT r9 #4): a def row
@@ -81,8 +81,7 @@ class LedgerSpec extends AnyFunSuite {
   private def libSources: Seq[java.nio.file.Path] = {
     val root = Paths.get("src/main/scala/graft")
     val mains = Set("Verify.scala", "Bench.scala", "Profile.scala",
-      "ScaleSmoke.scala", "GeoSmoke.scala", "AsofSmoke.scala",
-      "DeepSmoke.scala", "Plans.scala", "IterRepro.scala", "ProfileStages.scala")
+      "Plans.scala", "ProfileStages.scala")
     Files.walk(root).iterator().asScala
       .filter(p => p.toString.endsWith(".scala"))
       .filterNot(p => mains.contains(p.getFileName.toString))

@@ -208,16 +208,9 @@ class ScanSpec extends SparkSpec with org.scalatest.BeforeAndAfterAll {
     file == "sources/Tables.scala" ||
       (file == "ops/SourceOps.scala" && site.contains("\"mergeSchema\""))
 
-  /** Blanks block and line comments, keeping newlines so line numbers hold
-    * (a `//` inside a string literal ends the scanned line early — no
-    * parquet read shares a line with one today). */
-  private def stripComments(src: String): String =
-    raw"(?s)/\*.*?\*/|//[^\n]*".r.replaceAllIn(src, m =>
-      java.util.regex.Matcher.quoteReplacement(m.matched.replaceAll("[^\n]", " ")))
-
   private def lintViolations(sources: Seq[(String, String)]): Seq[String] =
     sources.flatMap { case (file, src) =>
-      val code = stripComments(src)
+      val code = SourceLint.stripComments(src)
       parquetRead.findAllMatchIn(code).toSeq
         .filterNot(m => allowed(file, m.matched))
         .map { m =>
@@ -227,17 +220,14 @@ class ScanSpec extends SparkSpec with org.scalatest.BeforeAndAfterAll {
     }
 
   test("source lint: every parquet read outside Tables goes through Tables.parquet") {
-    val root = Paths.get("src/main/scala/graft")
-    val sources = Files.walk(root).iterator().asScala
-      .filter(_.toString.endsWith(".scala")).toSeq.sortBy(_.toString)
-      .map(p => root.relativize(p).toString -> new String(Files.readAllBytes(p), "UTF-8"))
+    val sources = SourceLint.mainSources
     assert(sources.exists(_._1 == "sources/Tables.scala"))
     val violations = lintViolations(sources)
     assert(violations.isEmpty,
       "parquet reads outside Tables.parquet:\n" + violations.mkString("\n"))
     // the allow-listed mergeSchema read is still there and still matched
     val mergeRead = sources.filter(_._1 == "ops/SourceOps.scala")
-      .flatMap { case (_, s) => parquetRead.findAllIn(stripComments(s)) }
+      .flatMap { case (_, s) => parquetRead.findAllIn(SourceLint.stripComments(s)) }
     assert(mergeRead.size == 1 && mergeRead.head.contains("mergeSchema"))
   }
 

@@ -465,7 +465,7 @@ class TextOpsSpec extends SparkSpec {
   test("dupClusters checkpoint bounds lineage on a high-diameter chain") {
     // a 129-vertex path (diameter 128): plain propagation would blow the
     // 20-round cap; with jumping it converges in ~8 rounds, crossing
-    // ClusterCheckpointEvery — all vertices must still collapse to cluster
+    // a checkpoint every round — all vertices must still collapse to cluster
     // 0, and the returned plan must reflect only the rounds SINCE the last
     // checkpoint, not all of them.
     val chain = (0L until 128L).map(i => (i, i + 1)).toDF("id_a", "id_b")
@@ -474,7 +474,7 @@ class TextOpsSpec extends SparkSpec {
     assert(rows.length == 129)
     assert(rows.forall(_.getLong(1) == 0L), rows.mkString(","))
     val rounds = TextOps.lastPropagationRounds.get()
-    assert(rounds >= TextOps.ClusterCheckpointEvery && rounds <= 10,
+    assert(rounds >= 1 && rounds <= 10,
       s"expected ~8 rounds on diameter 128, took $rounds")
     val planNodes = out.queryExecution.optimizedPlan.collect { case p => p }.size
     // each un-checkpointed round adds join+agg layers; 8 jump rounds
