@@ -40,11 +40,10 @@ object Bench {
     // pre-materialize round-trip staging writes (memoized in SourceOps) so
     // the timed region measures the engine's read→agg, not coalesce(1) file
     // IO setup (VERDICT r2 §perf)
-    graft.ops.SourceOps.stagedQueries
-      .foreach { name =>
-        try SparkEntry.queries(name)(spark, sfDir).queryExecution.analyzed
-        catch { case e: Throwable => System.err.println(s"[bench] stage $name failed: ${e.getMessage}") }
-      }
+    SparkEntry.registry.filter(_.staged).foreach { row =>
+      try row.run(spark, sfDir).queryExecution.analyzed
+      catch { case e: Throwable => System.err.println(s"[bench] stage ${row.name} failed: ${e.getMessage}") }
+    }
     // JIT/codegen warmup for the shingle family: the first shingle query of
     // the session pays ~7-9 s of one-time whole-stage-codegen compilation
     // (profiled 12.0 s cold vs 2.4 s warm in any order) — on a real cluster
@@ -174,7 +173,7 @@ object Bench {
     // memo builds (BPE merges, dup-cluster closures) — expect its total to
     // sit above sweeps 2+.
     def sweep(): Seq[(String, Double)] =
-      SparkEntry.queries.toSeq.sortBy(_._1).map { case (name, fn) =>
+      SparkEntry.registry.sortBy(_.name).map { case SparkEntry.QuerySpec(name, fn, _, _) =>
         val stagedBefore = graft.ops.SourceOps.stagedKeyCount
         val t0 = System.nanoTime()
         try {
@@ -182,8 +181,8 @@ object Bench {
           val dt = (System.nanoTime() - t0) / 1e9
           if (graft.ops.SourceOps.stagedKeyCount > stagedBefore)
             System.err.println(s"[bench] WARNING: $name ran a materialize() " +
-              "staging write inside its timed region (missing from " +
-              "SourceOps.stagedQueries, or its pre-stage failed above) — " +
+              "staging write inside its timed region (its registry row " +
+              "lacks the staged flag, or its pre-stage failed above) — " +
               "its timing includes one-time staging IO")
           System.err.println(f"[bench] $name%-20s ${dt}%8.2f s")
           spark.catalog.clearCache() // queries persist() small frames; don't

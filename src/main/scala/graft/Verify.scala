@@ -51,14 +51,14 @@ object Verify {
     val only = args.collectFirst { case a if a.startsWith("--only=") =>
       a.stripPrefix("--only=").split(',').toSet }
     only.foreach { names =>
-      val unknown = names -- SparkEntry.queries.keySet
-      require(unknown.isEmpty, s"--only names not in SparkEntry.queries: ${unknown.mkString(",")}")
+      val unknown = names -- SparkEntry.registry.map(_.name)
+      require(unknown.isEmpty, s"--only names not in SparkEntry.registry: ${unknown.mkString(",")}")
     }
     new java.io.File(outDir).mkdirs()
     var unstable = List.empty[String]
     val toRun =
-      if (sqlOnly) Map.empty[String, (SparkSession, String) => org.apache.spark.sql.DataFrame]
-      else SparkEntry.queries.view.filterKeys(k => only.forall(_.contains(k))).toMap
+      if (sqlOnly) Nil
+      else SparkEntry.registry.filter(r => only.forall(_.contains(r.name)))
     if (toRun.nonEmpty) {
       // --sql-only writes a static JSON — don't pay SparkSession startup
       val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
@@ -73,7 +73,7 @@ object Verify {
         .getOrCreate()
       spark.sparkContext.setLogLevel("WARN")
       val stability = args.contains("--stability")
-      toRun.foreach { case (name, fn) =>
+      toRun.foreach { case SparkEntry.QuerySpec(name, fn, check, _) =>
         try {
           fn(spark, sfDir).coalesce(1).write.mode("overwrite")
             .parquet(s"$outDir/$name")
@@ -95,7 +95,7 @@ object Verify {
             // their values); declared no-oracle queries (sketch blobs with
             // spec'd error bounds) are draw-dependent by contract — the
             // driver records rows-only for them, so gate rows only
-            val hashOracled = SparkEntry.oracleSql.contains(name)
+            val hashOracled = check.isInstanceOf[SparkEntry.Oracle]
             def snap(df: org.apache.spark.sql.DataFrame): Seq[String] =
               if (hashOracled) canonRows(df) else Seq(df.count().toString)
             val dumped = snap(Tables.parquet(spark, s"$outDir/$name"))

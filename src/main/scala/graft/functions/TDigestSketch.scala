@@ -29,8 +29,8 @@ import org.apache.spark.sql.types.{BinaryType, DataType, DoubleType, NumericType
   * Determinism: centroid merging depends on input order, which Spark's
   * partitioning legitimately varies — so, exactly like KLL, the contract is
   * the SKETCH contract (rank-error bounds vs the exact twin, asserted in
-  * EventOpsSpec) rather than a value hash, and the declared query rides the
-  * no-oracle ledger with `q_monthly_median` as its oracled twin.
+  * EventOpsSpec) rather than a value hash, and the declared query's
+  * registry row names `q_monthly_median` as its oracled twin.
   */
 object TDigestFunctions {
   /** Compression parameter: ~2·k centroids retained; k=200 ⇒ bulk rank

@@ -16,8 +16,8 @@ import graft.sources.Tables
   * SortMergeJoin with zero Exchange operators in the join subtree.
   *
   * The write stages once per (sf) via [[SourceOps.materialize]] (external
-  * tables under a temp dir), registered in [[SourceOps.stagedQueries]] so
-  * Bench pre-stages it untimed. `repartition(BucketCount, key)` before the
+  * tables under a temp dir); its registry row is flagged `staged`
+  * ([[graft.SparkEntry.QuerySpec]]) so Bench pre-stages it untimed. `repartition(BucketCount, key)` before the
   * bucketed write uses the SAME Murmur3-pmod partitioning as the bucket file
   * router, so each task holds exactly one bucket's rows → one file per
   * bucket, keeping the per-bucket sort order usable at read time.

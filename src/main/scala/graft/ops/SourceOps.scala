@@ -20,103 +20,15 @@ import graft.sources.Tables
 object SourceOps {
 
   /** Number of staging dirs materialized so far — Bench snapshots this
-    * around each timed query to detect a materialize user missing from
-    * [[stagedQueries]] (a staging write inside a timed region). */
+    * around each timed query to detect a staging write inside a timed
+    * region, i.e. a registry row missing its `staged` flag. */
   def stagedKeyCount: Int = Artifacts.stagedKeyCount
 
   /** Declared queries whose construction stages a one-time [[materialize]]
-    * write. Owned HERE, next to materialize, so adding a new staging user
-    * and registering it for Bench's untimed pre-staging is one edit in one
-    * file — Bench iterates this list instead of a name list that would go
-    * silently stale. */
-  val stagedQueries: Seq[String] = Seq(
-    "q_csv_roundtrip", "q_json_roundtrip", "q_orc_roundtrip", "q_text_source",
-    "q_excel_roundtrip", "q_avro_roundtrip", "q_jdbc_roundtrip",
-    "q_partition_prune", "q_dpp_join", "q_schema_merge", "q_binary_files", "q_bucket_join",
-    "q_sketch_store", "q_compact_files", "q_stream_attrib", "q_stream_attrib_outer",
-    "q_stream_dedup",
-    "q_stream_window", "q_stream_running", "q_stream_asof", "q_stream_update",
-    // streamCov / streamAnnIngest stage the range-partitioned embedding
-    // files their micro-batch replays read (streamAnnIngest additionally
-    // shares the standing-index artifact + frozen c80 fits)
-    "q_stream_cov", "q_stream_ann",
-    // annAppend's construction stages the standing encoded-corpus index
-    // (and fits the frozen c80 quantizer + codebooks, disk-registered);
-    // annDelete reads the SAME standing artifact (tombstone view);
-    // annCompact additionally stages the compacted rewrite + its audit;
-    // annRetrain's v1 arm goes through annAppend (same standing artifact)
-    "q_ann_append", "q_ann_delete", "q_ann_compact", "q_ann_retrain",
-    // annLifecycle's chain stages the composed compacted index
-    // (ann_corpus_idx_lifecycle_<sf>) on top of the shared standing one
-    "q_ann_lifecycle",
-    // pcaPower's construction stages the exact-cov matrix artifact
-    // (cov_cells_<sf>) its power iteration reads; pcaProject and
-    // pcaDeflate additionally stage the eigenpair artifact (pca_eig_<sf>);
-    // whiten (and its outlier consumer) stages the second eigenpair
-    // (pca_eig2_<sf>) on top
-    "q_pca_power", "q_pca_project", "q_pca_deflate", "q_whiten",
-    "q_whiten_outliers",
-    // pcaK3 stages the third eigenpair (pca_eig3_<sf>) via the ladder
-    // recipe, on top of the first two rungs' artifacts; whiten3 reads
-    // all three rungs' artifacts (staging whichever aren't built yet)
-    "q_pca_k3", "q_whiten3",
-    // covUpdate's construction stages the standing corpus-triangle raw
-    // Long sums (cov_sums_<sf>) the incremental merge reads; covDowndate
-    // stages the full-corpus triangle (cov_sums_full_<sf>) it subtracts from
-    "q_cov_update", "q_cov_downdate",
-    // dfUpdate/dfDowndate stage the standing lexical-count artifacts
-    // (lex_df_<sf> / lex_df_full_<sf>) their Long merges read
-    "q_df_update", "q_df_downdate",
-    // the store-backed serving pair stages the MAINTAINED lexical
-    // artifact (lex_df_maint_<sf>, dfUpdate's output — transitively the
-    // standing lex_df_<sf> too); streamDf stages its range-partitioned
-    // ingest files; covLifecycle stages the standing corpus triangle
-    // (cov_sums_<sf>, shared with q_cov_update)
-    "q_bm25_store", "q_tfidf_store", "q_stream_df", "q_cov_lifecycle",
-    // lexLifecycle's chain reads the standing lex_df_<sf> artifact
-    "q_lex_lifecycle",
-    // the index-served pair stages the postings artifact
-    // (lex_postings_<sf>), the per-doc lengths (lex_doclen_<sf>), the
-    // 1-row corpus stats (lex_stats_<sf>) and count (lex_ndocs_<sf>)
-    // on top of the maintained lexical store
-    "q_bm25_index", "q_tfidf_index",
-    // postings maintenance: update appends onto the staged corpus-
-    // partition postings (lex_postings_part_<sf>), downdate anti-joins
-    // the staged full-corpus postings (lex_postings_<sf>); the streaming
-    // form stages its ingest slices (shared with q_stream_df) plus the
-    // corpus-partition artifact
-    "q_postings_update", "q_postings_downdate", "q_stream_postings",
-    // the length/counter streaming forms drain the shared ingest slices
-    // (stream_df_in_<sf>) and read the corpus-partition postings-derived
-    // artifacts (lex_postings_part_, lex_doclen_part_, lex_stats_part_);
-    // the all-documents form reads the lex_ndocs_part_ counter instead
-    "q_stream_doclen", "q_stream_lexstats", "q_stream_ndocs",
-    // the index-tier lifecycle stages the corpus-partition doc lengths
-    // (lex_doclen_part_<sf>) and scalar counters (lex_stats_part_<sf>)
-    // on top of the partition postings + the standing lex_df_
-    "q_postings_lifecycle",
-    // the TF-IDF lifecycle rung additionally stages the corpus-partition
-    // all-documents counter (lex_ndocs_part_<sf>) beside the postings-
-    // chain artifacts and the standing lex_df_
-    "q_tfidf_lifecycle",
-    // the composed RAG front door reads the same lexical-lifecycle
-    // artifacts; its ANN twin additionally probes the ANN lifecycle's
-    // compacted index (ann_corpus_idx_lifecycle_<sf> + frozen c80 fits)
-    "q_hybrid_lifecycle", "q_hybrid_lifecycle_ann",
-    // the lifecycle front door's arm-quality audit runs the same fusion
-    // (same maintained artifacts) under the retrievalEval metric block;
-    // its ANN twin runs the hybridLifecycleAnn fusion (compacted index)
-    "q_retrieval_eval_lifecycle", "q_retrieval_eval_lifecycle_ann",
-    // modularity reads the staged LPA label table (communities itself
-    // keeps deriving LPA inline — the census times the algorithm, the
-    // quality score times the evaluation)
-    "q_modularity",
-    // edges()-memo user that stages the shared graph edge table for the
-    // whole traversal family AT CONSTRUCTION (GraphOps.edges scaladoc);
-    // q_also_bought re-derives from the fact and never touches the memo,
-    // so it cannot stand in here — q_khop's construction calls edges()
-    // and its node-count guard probe, both one-time
-    "q_khop")
+    * write: the rows flagged `staged` in [[graft.SparkEntry.registry]], where
+    * each flag sits beside its reason. Lazy, so SourceOps and SparkEntry
+    * never initialize each other. */
+  lazy val stagedQueries: Seq[String] = graft.SparkEntry.registry.filter(_.staged).map(_.name)
 
   /** Round-trip staging dirs, memoized per key for the life of the JVM
     * ([[Artifacts.stage]]): the *write* half of a round-trip is setup, not

@@ -1137,8 +1137,12 @@ object TextOps {
       .select(col("doc_id"),
         explode(sequence(col("i").cast("long"), col("i").cast("long") + (NgramK - 1))).as("j"))
       .distinct()
+    // outer + a null filter ABOVE the Generate: a plain posexplode makes
+    // Catalyst infer size(toks) > 0 AND isnotnull(toks) and push it below
+    // the projection, tokenizing every document three times
     val toksPos = base
-      .select(col("doc_id"), posexplode(col("toks")))
+      .select(col("doc_id"), posexplode_outer(col("toks")))
+      .filter(col("pos").isNotNull)
       .select(col("doc_id"), (col("pos") + 1).cast("long").as("j"), col("col").as("tok"))
     val agg = toksPos.join(cut, Seq("doc_id", "j"), "left_anti")
       .groupBy("doc_id")

@@ -616,7 +616,7 @@ object StreamOps {
     * delay parameter, not the plan. */
   def streamAttrib(spark: org.apache.spark.sql.SparkSession, sf: String): DataFrame = {
     // input staging is deterministic per sf → memoized (Bench pre-stages it
-    // untimed via SourceOps.stagedQueries); only out/ckpt are per-run
+    // untimed: the registry row is flagged staged); only out/ckpt are per-run
     val inDir = graft.ops.SourceOps.materialize(s"stream_attrib_in_$sf") { d =>
       val ev = graft.ops.EventOps.events(spark, sf)
         .select(col("ts"), col("user_id"), col("event_type"), col("value"))

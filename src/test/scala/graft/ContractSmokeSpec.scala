@@ -1,15 +1,36 @@
 package graft
 
+import graft.ops.SourceOps
+
 /** Contract-wide smoke: EVERY declared query builds, executes at sf0.001,
   * and returns rows. Catches a broken builder or an sf-dependent assumption
-  * before the driver's Verify does. */
+  * before Verify does.
+  *
+  * Each run also checks the registry's `staged` flags: with every flagged
+  * row pre-staged the way Bench does it (analyzed plan only), building and
+  * running any declared query must stage nothing new — otherwise Bench
+  * times that query's one-time staging IO. */
 class ContractSmokeSpec extends SparkSpec {
 
-  SparkEntry.queries.toSeq.sortBy(_._1).foreach { case (name, fn) =>
+  private lazy val prestaged: Unit = {
+    SparkEntry.registry.filter(_.staged).foreach(_.run(spark, sf0001).queryExecution.analyzed)
+    spark.catalog.clearCache()
+  }
+
+  test("staged rows pre-stage from their analyzed plans, as Bench does") {
+    prestaged
+    assert(SourceOps.stagedKeyCount > 0)
+  }
+
+  SparkEntry.registry.sortBy(_.name).foreach { case SparkEntry.QuerySpec(name, fn, _, _) =>
     test(s"$name runs and returns rows at sf0.001") {
+      prestaged
+      val staged = SourceOps.stagedKeyCount
       val df = fn(spark, sf0001)
       assert(df.columns.nonEmpty)
       assert(df.count() > 0, s"$name returned zero rows")
+      assert(SourceOps.stagedKeyCount == staged,
+        s"$name staged a write after pre-staging: flag its registry row staged")
       // several query builders persist() shared frames and rely on the
       // caller-side cache contract (Bench/Verify clearCache per query) —
       // honor it here too, or the suite accumulates one cache per query
@@ -19,65 +40,5 @@ class ContractSmokeSpec extends SparkSpec {
 
   test("entry returns rows (driver t1 smoke)") {
     assert(SparkEntry.entry(spark).count() > 0)
-  }
-
-  test("every oracle key has a query (no orphan oracles)") {
-    val orphans = SparkEntry.oracleSql.keySet -- SparkEntry.queries.keySet
-    assert(orphans.isEmpty, s"orphan oracles: $orphans")
-  }
-
-  test("every staged query name is a declared query") {
-    val unknown = graft.ops.SourceOps.stagedQueries.toSet -- SparkEntry.queries.keySet
-    assert(unknown.isEmpty, s"stagedQueries not in registry: $unknown")
-  }
-
-  /** The no-oracle ledger: declared queries whose semantics aren't
-    * SQL-expressible (sketch internals, LSH banding, ML scoring). The
-    * convention every VERDICT audits by hand: each MUST name an ORACLED
-    * exact twin whose spec ties the two together. Adding a no-oracle
-    * query means adding a row here — orphaned no-oracle queries fail. */
-  private val noOracleTwins: Map[String, String] = Map(
-    "q_ann_lsh" -> "q_cosine_topk",
-    "q_ann_ivf" -> "q_cosine_topk",
-    "q_ann_pq" -> "q_knn_join",
-    "q_ann_append" -> "q_knn_join",
-    "q_ann_delete" -> "q_knn_join",
-    "q_ann_compact" -> "q_knn_join",
-    "q_ann_retrain" -> "q_retrieval_eval",
-    "q_ann_lifecycle" -> "q_knn_join",
-    "q_stream_ann" -> "q_knn_join",
-    "q_hybrid_ann" -> "q_hybrid_retrieval",
-    "q_hybrid_lifecycle_ann" -> "q_hybrid_lifecycle",
-    "q_retrieval_eval_ann" -> "q_retrieval_eval",
-    "q_retrieval_eval_lifecycle_ann" -> "q_retrieval_eval_lifecycle",
-    "q_dedup_minhash" -> "q_dedup_jaccard",
-    "q_dedup_simhash" -> "q_dedup_jaccard",
-    "q_dedup_cosine_lsh" -> "q_dedup_cosine",
-    "q_dup_clusters_lsh" -> "q_dup_clusters",
-    "q_dedup_canonical_lsh" -> "q_dedup_canonical",
-    "q_semdedup" -> "q_dedup_cosine",
-    "q_media_dedup_lsh" -> "q_media_dedup",
-    "q_score_batch" -> "q_score_exact",
-    "q_sketch_stats" -> "q_stats_pack",
-    "q_heavy_hitters" -> "q_ngram_top",
-    "q_hll_merge" -> "q_monthly_uniques",
-    "q_kll_merge" -> "q_monthly_median",
-    "q_tdigest_merge" -> "q_monthly_median",
-    "q_ks_drift_sketch" -> "q_ks_drift",
-    "q_sketch_store" -> "q_monthly_uniques",
-    "q_cms_freq" -> "q_user_freq")
-
-  test("every declared query is oracled OR on the no-oracle ledger with an oracled twin") {
-    val unoracled = SparkEntry.queries.keySet -- SparkEntry.oracleSql.keySet
-    val unledgered = unoracled -- noOracleTwins.keySet
-    assert(unledgered.isEmpty,
-      s"no-oracle queries missing a declared twin: $unledgered")
-    val staleRows = noOracleTwins.keySet -- unoracled
-    assert(staleRows.isEmpty,
-      s"ledger rows for queries that ARE oracled (or gone): $staleRows")
-    noOracleTwins.foreach { case (q, twin) =>
-      assert(SparkEntry.oracleSql.contains(twin),
-        s"$q's twin $twin is not itself oracled")
-    }
   }
 }

@@ -347,8 +347,8 @@ class EventOpsSpec extends SparkSpec {
       assert(math.abs(rankOf(s, p95) - 0.95) <= 0.05,
         s"$m: p95 est $p95 has true rank ${rankOf(s, p95)}")
     }
-    // and the oracled exact twin covers the same months (the pairing the
-    // no-oracle ledger in ContractSmokeSpec records)
+    // and the oracled exact twin covers the same months (the pairing its
+    // registry row's Twin records)
     val exactMonths = graft.ops.EventOps.monthlyMedian(spark, sf001).collect()
       .map(_.getDate(0).toString).toSet
     assert(exactMonths == est.map(_._1).toSet)
@@ -441,8 +441,8 @@ class EventOpsSpec extends SparkSpec {
       assert(math.abs(mx - s.last) <= 5e-5,
         s"$m: max_val $mx vs true max ${s.last}")
     }
-    // and the oracled exact twin covers the same months (the pairing the
-    // no-oracle ledger in ContractSmokeSpec records)
+    // and the oracled exact twin covers the same months (the pairing its
+    // registry row's Twin records)
     val exactMonths = graft.ops.EventOps.monthlyMedian(spark, sf001).collect()
       .map(_.getDate(0).toString).toSet
     assert(exactMonths == est.map(_._1).toSet)

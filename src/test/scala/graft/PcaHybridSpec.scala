@@ -645,7 +645,7 @@ class PcaHybridSpec extends SparkSpec {
     // the ANN twin of the lifecycle audit — the same metric spelling over
     // hybridLifecycleAnn's own fusion: a test-side recompute from that
     // fused table pins the arithmetic (the retrievalEvalLifecycle
-    // discipline, sub-linear tier), the no-oracle ledger points at the
+    // discipline, sub-linear tier), its registry row's Twin points at the
     // oracled exact twin for value semantics
     val fused = TextOps.hybridLifecycleAnn(spark, sf0001).collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getDouble(3)))

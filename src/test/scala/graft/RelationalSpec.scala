@@ -50,11 +50,6 @@ class RelationalSpec extends SparkSpec {
     rows.foreach(r => assert(r.getDouble(1) >= 0.0 && r.getDouble(1) <= 1.0))
   }
 
-  test("every declared oracle query has a queries entry (contract integrity)") {
-    val missing = SparkEntry.oracleSql.keySet -- SparkEntry.queries.keySet
-    assert(missing.isEmpty, s"oracleSql without queries: $missing")
-  }
-
   test("topk is a TakeOrderedAndProject, not a global sort") {
     val plan = Relational.topk(spark, sf0001).queryExecution.executedPlan.toString
     assert(plan.contains("TakeOrderedAndProject"), plan)

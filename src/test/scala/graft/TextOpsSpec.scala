@@ -109,6 +109,30 @@ class TextOpsSpec extends SparkSpec {
     assert(r(3L)._3 == 0L && r(3L)._2 == 27L)
   }
 
+  test("q_dedup_span_cut plan: each documents branch tokenizes once") {
+    import org.apache.spark.sql.catalyst.expressions.{Lower, StringSplit}
+    import org.apache.spark.sql.execution.SparkPlan
+    import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+    import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
+    import org.apache.spark.sql.execution.exchange.ReusedExchangeExec
+    val df = TextOps.dedupSpanCut(spark, sf0001)
+    df.collect()
+    def kids(p: SparkPlan): Seq[SparkPlan] = p match {
+      case a: AdaptiveSparkPlanExec => Seq(a.executedPlan)
+      case s: QueryStageExec => Seq(s.plan)
+      case r: ReusedExchangeExec => Seq(r.child)
+      case m: InMemoryTableScanExec => Seq(m.relation.cachedPlan)
+      case other => other.children ++ other.subqueries
+    }
+    def splits(p: SparkPlan): Int =
+      p.expressions.map(_.collect { case StringSplit(Lower(_), _, _) => }.size).sum
+    // the most tokenizations on any root-to-scan path, i.e. per row of a
+    // documents branch
+    def worstPath(p: SparkPlan): Int = splits(p) + kids(p).map(worstPath).maxOption.getOrElse(0)
+    val plan = df.queryExecution.executedPlan
+    assert(worstPath(plan) == 1, plan.toString)
+  }
+
   test("dedupSpanCut reconciles with dupSpanCoverage on the fixture corpus") {
     val cov = TextOps.dupSpanCoverage(spark, sf0001).collect()
       .map(r => r.getLong(0) -> r.getLong(3)).toMap // doc_id -> covered_tokens
