@@ -73,6 +73,17 @@ object Verify {
         .getOrCreate()
       spark.sparkContext.setLogLevel("WARN")
       val stability = args.contains("--stability")
+      // the gate's perturbed partitioning (13 reducers, 1 MB input splits)
+      // around `body`, then back to the dump run's settings
+      def perturbed[A](body: => A): A = {
+        spark.conf.set("spark.sql.shuffle.partitions", "13")
+        spark.conf.set("spark.sql.files.maxPartitionBytes", "1048576")
+        try body
+        finally {
+          spark.conf.set("spark.sql.shuffle.partitions", cpus)
+          spark.conf.unset("spark.sql.files.maxPartitionBytes")
+        }
+      }
       toRun.foreach { case SparkEntry.QuerySpec(name, fn, check, _) =>
         try {
           fn(spark, sfDir).coalesce(1).write.mode("overwrite")
@@ -99,20 +110,13 @@ object Verify {
             def snap(df: org.apache.spark.sql.DataFrame): Seq[String] =
               if (hashOracled) canonRows(df) else Seq(df.count().toString)
             val dumped = snap(Tables.parquet(spark, s"$outDir/$name"))
-            spark.conf.set("spark.sql.shuffle.partitions", "13")
-            spark.conf.set("spark.sql.files.maxPartitionBytes", "1048576")
-            val perturbed =
-              try snap(fn(spark, sfDir))
-              finally {
-                spark.conf.set("spark.sql.shuffle.partitions", cpus)
-                spark.conf.unset("spark.sql.files.maxPartitionBytes")
-              }
-            if (dumped != perturbed) {
+            val rerun = perturbed(snap(fn(spark, sfDir)))
+            if (dumped != rerun) {
               unstable ::= name
-              val firstDiff = dumped.zipAll(perturbed, "<missing>", "<missing>")
+              val firstDiff = dumped.zipAll(rerun, "<missing>", "<missing>")
                 .find { case (a, b) => a != b }
               System.err.println(s"[stability] $name UNSTABLE under perturbed " +
-                s"partitioning (${dumped.length} vs ${perturbed.length} rows); " +
+                s"partitioning (${dumped.length} vs ${rerun.length} rows); " +
                 s"first diff: ${firstDiff}")
             } else System.err.println(
               s"[stability] $name ok${if (hashOracled) "" else " (no-oracle: rows only)"}")
@@ -165,13 +169,7 @@ object Verify {
             val scratch = Files.createTempDirectory(
               "gate_" + key.replaceAll("[^A-Za-z0-9._-]", "_")).toString
             try {
-              spark.conf.set("spark.sql.shuffle.partitions", "13")
-              spark.conf.set("spark.sql.files.maxPartitionBytes", "1048576")
-              try write(scratch)
-              finally {
-                spark.conf.set("spark.sql.shuffle.partitions", cpus)
-                spark.conf.unset("spark.sql.files.maxPartitionBytes")
-              }
+              perturbed(write(scratch))
               val (a, b) = (parquetLeaves(standDir), parquetLeaves(scratch))
               if (a != b) {
                 unstable ::= s"artifact:$key"

@@ -118,16 +118,19 @@ object Artifacts {
     build(Session, ((appId +: name +: parts) :+ sp :+ mpb).mkString("|"), appId)(make)
   }
 
-  /** Fit-or-load a model artifact at `file`, memoized in the JVM. A model
-    * that fails to load is re-fitted and saved through a sibling temp path
-    * renamed into place, so a JVM killed mid-save leaves a stray temp, never
-    * a truncated artifact that reloads as a different model. A failed save
-    * is not fatal: the fitted value still serves this JVM. */
+  /** Fit-or-load a model artifact at `file`, memoized in the JVM. A missing
+    * file is fitted without a load attempt (a Spark model read of a missing
+    * path fails only after logging its stack trace); one that exists but
+    * fails to load is re-fitted. Either way the fit is saved through a
+    * sibling temp path renamed into place, so a JVM killed mid-save leaves a
+    * stray temp, never a truncated artifact that reloads as a different
+    * model. A failed save is not fatal: the fitted value still serves this
+    * JVM. */
   private[graft] def fitOrLoad[A](file: String)(load: Path => A, save: (A, Path) => Unit)(
       fit: => A): A =
     build(Model, file) {
       val path = Paths.get(file)
-      Try(load(path)).getOrElse {
+      (if (Files.exists(path)) Try(load(path)).toOption else None).getOrElse {
         val a = fit
         Try(saveAtomically(path)(save(a, _)))
         a

@@ -18,8 +18,8 @@ object EventOps {
     * both parquet TIMESTAMP(NANOS) and TIMESTAMP(MICROS, not-UTC-adjusted)
     * across driver rounds, so dispatch on the resolved type instead of
     * assuming one:
-    *  - NANOS: Spark 4 rejects it outright (PARQUET_TYPE_ILLEGAL), so read
-    *    nanos as raw longs (`nanosAsLong`) and convert with integer
+    *  - NANOS: Spark 4 rejects it outright (PARQUET_TYPE_ILLEGAL), so
+    *    `Tables` reads nanos as raw longs and this converts with integer
     *    division (`div`, not `/` — double division loses precision above
     *    2^53 and ~1.7e18 ns is well past it), then `timestamp_micros`.
     *  - MICROS not-UTC-adjusted: arrives as TIMESTAMP_NTZ; cast to the
@@ -28,7 +28,6 @@ object EventOps {
     * Either way the result is TIMESTAMP with UTC wall-clock matching
     * DuckDB's naive read of the same file. */
   def events(spark: SparkSession, sf: String): DataFrame = {
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     val raw = Tables.load(spark, sf, "events")
     raw.schema("ts").dataType match {
       case org.apache.spark.sql.types.LongType =>

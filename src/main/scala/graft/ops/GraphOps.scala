@@ -152,7 +152,8 @@ object GraphOps {
   val IterPartsTargetKey = "spark.graft.graph.iterPartsTargetBytes"
 
   /** Run `body` with `spark.sql.shuffle.partitions` pinned to `p`,
-    * restoring the session value after — the StreamOps drain discipline.
+    * restoring the session value after — the library's one remaining write
+    * of the caller's session conf (see the conf lint in ContractSmokeSpec).
     * Only the EAGER work inside `body` (persist probes, per-round
     * localCheckpoints) plans under `p`; a returned lazy frame keeps its
     * checkpointed inputs and plans its own (node-sized) tail under the

@@ -195,30 +195,27 @@ object Sql4Ops {
     * the DRIVER — each iteration plans one ordinary aggregate (here a
     * single map-combined scan term), so the loop adds scheduling constant,
     * not data volume; the empty top threshold exercises the empty-guard
-    * (`coalesce(sum, 0)`) the reference's A7 demands. */
+    * (`coalesce(sum, 0)`) the reference's A7 demands. Needs
+    * `spark.sql.scripting.enabled`, on by default in Spark 4.1; a
+    * deployer's setting is left as it is. */
   def sqlScript(spark: SparkSession, sf: String): DataFrame = {
     val o = view(spark, sf, "orders")
-    val key = "spark.sql.scripting.enabled"
-    val prev = spark.conf.getOption(key)
-    try {
-      spark.conf.set(key, "true")
-      spark.sql(s"""
-        BEGIN
-          DECLARE k INT DEFAULT 1;
-          DECLARE acc ARRAY<STRUCT<threshold: BIGINT, n_orders: BIGINT,
-            revenue: DOUBLE>> DEFAULT array();
-          WHILE k <= $ScriptSteps DO
-            SET acc = (SELECT array_append(acc, named_struct(
-                'threshold', CAST(k * $ScriptStep AS BIGINT),
-                'n_orders', count(*),
-                'revenue', round(coalesce(sum(o_totalprice), 0.0), 4)))
-              FROM $o WHERE o_totalprice > k * $ScriptStep);
-            SET k = k + 1;
-          END WHILE;
-          SELECT r.threshold, r.n_orders, r.revenue
-          FROM (SELECT explode(acc) AS r) ORDER BY r.threshold;
-        END""")
-    } finally prev.fold(spark.conf.unset(key))(spark.conf.set(key, _))
+    spark.sql(s"""
+      BEGIN
+        DECLARE k INT DEFAULT 1;
+        DECLARE acc ARRAY<STRUCT<threshold: BIGINT, n_orders: BIGINT,
+          revenue: DOUBLE>> DEFAULT array();
+        WHILE k <= $ScriptSteps DO
+          SET acc = (SELECT array_append(acc, named_struct(
+              'threshold', CAST(k * $ScriptStep AS BIGINT),
+              'n_orders', count(*),
+              'revenue', round(coalesce(sum(o_totalprice), 0.0), 4)))
+            FROM $o WHERE o_totalprice > k * $ScriptStep);
+          SET k = k + 1;
+        END WHILE;
+        SELECT r.threshold, r.n_orders, r.revenue
+        FROM (SELECT explode(acc) AS r) ORDER BY r.threshold;
+      END""")
   }
 
   def sqlUdfBands(spark: SparkSession, sf: String): DataFrame = {

@@ -45,9 +45,14 @@ object Tables {
     * data file by path, this takes the first in listing order: both read
     * one footer and assume every part file agrees with it. The footer is
     * converted by `readSchemaFromFooter` with the converter settings the
-    * inference task uses (binary-as-string, INT96, timestamp-NTZ,
-    * nanos-as-long and unknown-annotation handling from the session; the
-    * rest at their defaults).
+    * inference task uses (binary-as-string, INT96, timestamp-NTZ and
+    * unknown-annotation handling from the session; the rest at their
+    * defaults), except that a TIMESTAMP(NANOS) column always reads as its
+    * raw LongType nanoseconds. Spark 4 has no nanosecond timestamp and
+    * fails inference on one (PARQUET_TYPE_ILLEGAL) unless the session sets
+    * `spark.sql.legacy.parquet.nanosAsLong`; the scan itself reads the
+    * column as long whatever that flag says, so only this schema step
+    * needs it, and no read that worked before changes.
     *
     * Driver cost is O(1) in the file count: three status calls, one
     * directory iterator stopped at the first data file, one footer read
@@ -78,7 +83,7 @@ object Tables {
       assumeBinaryIsString = conf.isParquetBinaryAsString,
       assumeInt96IsTimestamp = conf.isParquetINT96AsTimestamp,
       inferTimestampNTZ = conf.parquetInferTimestampNTZEnabled,
-      nanosAsLong = conf.legacyParquetNanosAsLong,
+      nanosAsLong = true,
       respectUnknownTypeAnnotation = conf.parquetReaderRespectUnknownTypeAnnotation)
     ParquetFileFormat.readSchemaFromFooter(new Footer(file.getPath, footer), converter)
   }

@@ -2,9 +2,11 @@ package graft.streaming
 
 import java.sql.Timestamp
 import graft.sources.Tables
-import org.apache.spark.sql.{DataFrame, Dataset}
+import org.apache.spark.sql.{DataFrame, Dataset, Row, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
+import org.apache.spark.sql.graft.Bridge
+import org.apache.spark.sql.streaming.{
+  DataStreamWriter, GroupState, GroupStateTimeout, OutputMode, Trigger}
 
 /** Per-user session accumulator carried across micro-batches. */
 case class SessState(startMs: Long, lastMs: Long, n: Long)
@@ -240,12 +242,6 @@ class IdleFlushProcessor(gapMs: Long)
   */
 object StreamOps {
 
-  /** Create a fresh run directory (sink + checkpoint) under `target/tmp`,
-    * run `body` with its path, and delete it in a `finally` — success OR
-    * failure, so a throwing drain can't leak staged sinks/checkpoints into
-    * target/tmp (ADVICE r10; the pre-r11 sites deleted only on success).
-    * Callers must eagerly materialize (`localCheckpoint()`) any DataFrame
-    * they return: its backing files are gone when `body` exits. */
   /** The ONE staging recipe every drained stream's file source replays:
     * write `df` into `parts` range-partitioned files at `dir/sub`, then
     * space the part files' mtimes one minute apart in name order so the
@@ -280,6 +276,12 @@ object StreamOps {
     }
   }
 
+  /** Create a fresh run directory (sink + checkpoint) under `target/tmp`,
+    * run `body` with its path, and delete it in a `finally` — success OR
+    * failure, so a throwing drain can't leak staged sinks/checkpoints into
+    * target/tmp (ADVICE r10; the pre-r11 sites deleted only on success).
+    * Callers must eagerly materialize (`localCheckpoint()`) any DataFrame
+    * they return: its backing files are gone when `body` exits. */
   private def withRunDir[A](prefix: String)(body: String => A): A = {
     val base = java.nio.file.Paths.get("target", "tmp")
     java.nio.file.Files.createDirectories(base)
@@ -294,6 +296,60 @@ object StreamOps {
       ()
     }
   }
+
+  /** Shuffle partitions of every state-pinned drain (see [[drain]]). */
+  private val StatePartitions = 4
+
+  /** The engine's one stream drain: builds the caller's writer on a scoped
+    * clone of `spark`, runs it under `Trigger.AvailableNow` and blocks until
+    * every available input has been processed. The writer's streams must
+    * be read on the session it is handed ([[replay]], or the caller's own
+    * reader), so the query runs there.
+    *
+    * The clone carries the caller's runtime conf — Verify's perturbed
+    * partitioning, a test's time zone — and the drain writes only the
+    * clone, never the caller's session:
+    *  - `pinState` sets [[StatePartitions]] shuffle partitions. Spark fixes
+    *    a stateful query's partition count from its session at first start
+    *    (and keeps it in the checkpoint), and that count is a deploy-time
+    *    choice sized to state VOLUME, not to the session's batch-shuffle
+    *    width: a stream-stream join commits ~4 state stores per partition
+    *    per side per micro-batch, so at 32 session partitions
+    *    `q_stream_attrib` paid hundreds of checkpoint commits for a 33-row
+    *    result (profiled: 9.9 s → ~3 s at 4 partitions). The pinned
+    *    foreachBatch drain ([[streamAsof]]) runs its batch bodies at that
+    *    width too.
+    *  - `rocksDb` sets the RocksDB state store provider, which
+    *    `transformWithState` requires (and its production configuration).
+    * A stateless drain sets nothing and runs at the caller's width, so
+    * Verify's `--stability` perturbation still reaches its batch bodies.
+    * The caller's streaming listeners are attached to the clone, so a
+    * monitor on the caller's session still sees the drain's progress. */
+  private def drain(spark: SparkSession, pinState: Boolean = false, rocksDb: Boolean = false)(
+      writer: SparkSession => DataStreamWriter[_]): Unit = {
+    val scoped = Bridge.cloneSession(spark)
+    if (pinState) scoped.conf.set("spark.sql.shuffle.partitions", StatePartitions.toString)
+    if (rocksDb) scoped.conf.set("spark.sql.streaming.stateStore.providerClass",
+      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
+    spark.streams.listListeners().foreach(scoped.streams.addListener)
+    writer(scoped).trigger(Trigger.AvailableNow()).start().awaitTermination()
+  }
+
+  /** File-stream replay of the staged parquet slices at `dir`, `perTrigger`
+    * files per micro-batch (oldest first: see [[stageSlices]]). */
+  private def replay(s: SparkSession, dir: String, perTrigger: Int): DataFrame =
+    s.readStream.schema(Tables.parquet(s, dir).schema)
+      .option("maxFilesPerTrigger", perTrigger.toLong).parquet(dir)
+
+  /** Append-mode parquet sink at `run/out`, checkpointed at `run/ckpt`. */
+  private def parquetSink(ds: Dataset[_], run: String): DataStreamWriter[_] =
+    ds.writeStream.format("parquet")
+      .option("path", s"$run/out").option("checkpointLocation", s"$run/ckpt")
+
+  /** foreachBatch sink running `body` on each micro-batch and its id. */
+  private def eachBatch(df: DataFrame, checkpointDir: String)(
+      body: (DataFrame, Long) => Unit): DataStreamWriter[Row] =
+    df.writeStream.option("checkpointLocation", checkpointDir).foreachBatch(body)
 
   /** Tumbling 1-hour windowed counts + sums with a 1-hour watermark — the
     * streaming twin of EventOps.timeBucket (identical results in batch). */
@@ -405,25 +461,13 @@ object StreamOps {
         .select("user_id", "ts", "value"), "purch")
     }
     withRunDir("stream_attrib_outer_run_") { run =>
-      val prevShuffle = spark.conf.get("spark.sql.shuffle.partitions")
-      try {
-        spark.conf.set("spark.sql.shuffle.partitions", "4")
-        // second identical drain = the flush restart (see scaladoc)
-        (1 to 2).foreach { _ =>
-          val cs = spark.readStream
-            .schema(Tables.parquet(spark, s"$inDir/clicks").schema)
-            .option("maxFilesPerTrigger", "1").parquet(s"$inDir/clicks")
-          val ps = spark.readStream
-            .schema(Tables.parquet(spark, s"$inDir/purch").schema)
-            .option("maxFilesPerTrigger", "1").parquet(s"$inDir/purch")
-          val q = purchaseAttributionOuter(cs, ps, delay = "1 hour")
-            .writeStream.format("parquet")
-            .option("path", s"$run/out").option("checkpointLocation", s"$run/ckpt")
-            .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-            .start()
-          q.awaitTermination()
+      // second identical drain = the flush restart (see scaladoc)
+      (1 to 2).foreach { _ =>
+        drain(spark, pinState = true) { s =>
+          parquetSink(purchaseAttributionOuter(replay(s, s"$inDir/clicks", 1),
+            replay(s, s"$inDir/purch", 1), delay = "1 hour"), run)
         }
-      } finally spark.conf.set("spark.sql.shuffle.partitions", prevShuffle)
+      }
       Tables.parquet(spark, s"$run/out")
         .groupBy("user_id")
         .agg(count(col("click_ts")).as("n_matched"),
@@ -466,23 +510,13 @@ object StreamOps {
     withRunDir("stream_asof_run_") { run =>
       val ord = graft.sources.Tables.load(spark, sf, "orders")
         .select("o_custkey", "o_orderkey", "o_orderdate", "o_totalprice")
-      val stream = spark.readStream
-        .schema(Tables.parquet(spark, s"$inDir/in").schema)
-        .option("maxFilesPerTrigger", "2").parquet(s"$inDir/in")
-      val prevShuffle = spark.conf.get("spark.sql.shuffle.partitions")
-      try {
-        spark.conf.set("spark.sql.shuffle.partitions", "4")
-        val q = stream.writeStream
-          .option("checkpointLocation", s"$run/ckpt")
-          .foreachBatch { (batch: DataFrame, _: Long) =>
-            graft.ops.EventOps
-              .asofJoinFrom(batch.select("event_id", "user_id", "ts"), ord)
-              .write.mode("append").parquet(s"$run/out")
-          }
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-          .start()
-        q.awaitTermination()
-      } finally spark.conf.set("spark.sql.shuffle.partitions", prevShuffle)
+      drain(spark, pinState = true) { s =>
+        eachBatch(replay(s, s"$inDir/in", 2), s"$run/ckpt") { (batch, _) =>
+          graft.ops.EventOps
+            .asofJoinFrom(batch.select("event_id", "user_id", "ts"), ord)
+            .write.mode("append").parquet(s"$run/out")
+        }
+      }
       Tables.parquet(spark, s"$run/out")
         .orderBy("event_id")
         .localCheckpoint() // eager — the run dir (sink + checkpoint) is deleted on exit
@@ -497,16 +531,11 @@ object StreamOps {
     * change the answer — the exactly-once contract without MERGE INTO.
     * With a transactional table format the body becomes a real MERGE. */
   def foreachBatchMerge(events: DataFrame, logDir: String,
-                        checkpointDir: String,
-                        trigger: Option[org.apache.spark.sql.streaming.Trigger] = None)
-      : org.apache.spark.sql.streaming.StreamingQuery = {
-    val writer = events.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        mergeBatch(batch, batchId, logDir)
-      }
-    trigger.fold(writer)(writer.trigger).start()
-  }
+                        checkpointDir: String): org.apache.spark.sql.streaming.StreamingQuery =
+    mergeSink(events, logDir, checkpointDir).start()
+
+  private def mergeSink(events: DataFrame, logDir: String, checkpointDir: String) =
+    eachBatch(events, checkpointDir)(mergeBatch(_, _, logDir))
 
   /** The per-micro-batch body of [[foreachBatchMerge]], exposed so the
     * checkpoint-restart spec can wrap it with an injected crash AFTER the
@@ -534,15 +563,11 @@ object StreamOps {
     * idempotence-at-compaction contract as [[foreachBatchMerge]]. */
   def mvDeltaSink(feed: DataFrame, logDir: String,
                   checkpointDir: String): org.apache.spark.sql.streaming.StreamingQuery =
-    feed.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        graft.ops.Relational.feedDeltas(batch)
-          .withColumn("batch_id", lit(batchId))
-          .write.mode("append").parquet(logDir)
-        ()
-      }
-      .start()
+    eachBatch(feed, checkpointDir) { (batch, batchId) =>
+      graft.ops.Relational.feedDeltas(batch)
+        .withColumn("batch_id", lit(batchId))
+        .write.mode("append").parquet(logDir)
+    }.start()
 
   /** The refreshed MV: base aggregate ⊕ the summed delta log. Replay-safe:
     * duplicate (bucket, batch_id) rows — a batch re-run after a crash
@@ -568,7 +593,7 @@ object StreamOps {
     * r8 #5): stages the harness events table as a 4-file parquet directory,
     * runs the REAL structured stream — file source, `maxFilesPerTrigger=2`
     * so the log genuinely spans multiple micro-batches, `Trigger
-    * .AvailableNow` to drain and stop — through [[foreachBatchMerge]], and
+    * .AvailableNow` to drain and stop — through [[foreachBatchMerge]]'s sink, and
     * returns the [[latestState]] compaction view. Deterministic and
     * batching-independent, which is the very property the sink's
     * idempotent-compaction contract promises: (user_id, ts) is unique in
@@ -581,11 +606,10 @@ object StreamOps {
       val ev = graft.ops.EventOps.events(spark, sf)
         .select(col("event_id"), col("ts"), col("user_id"), col("value"))
       ev.repartition(4, col("user_id")).write.parquet(s"$run/in")
-      val stream = spark.readStream.schema(ev.schema)
-        .option("maxFilesPerTrigger", "2").parquet(s"$run/in")
-      val q = foreachBatchMerge(stream, s"$run/log", s"$run/ckpt",
-        Some(org.apache.spark.sql.streaming.Trigger.AvailableNow()))
-      q.awaitTermination()
+      drain(spark) { s =>
+        mergeSink(s.readStream.schema(ev.schema)
+          .option("maxFilesPerTrigger", "2").parquet(s"$run/in"), s"$run/log", s"$run/ckpt")
+      }
       // materialize the (small: one row per user) compaction BEFORE the run
       // dir is deleted — without the cleanup every bench/verify/spec call
       // left a full staged copy of the events table behind (review r9)
@@ -626,28 +650,10 @@ object StreamOps {
         .repartition(4).write.parquet(s"$d/purch")
     }
     withRunDir("stream_attrib_run_") { run =>
-    val cs = spark.readStream.schema(Tables.parquet(spark, s"$inDir/clicks").schema)
-      .option("maxFilesPerTrigger", "2").parquet(s"$inDir/clicks")
-    val ps = spark.readStream.schema(Tables.parquet(spark, s"$inDir/purch").schema)
-      .option("maxFilesPerTrigger", "2").parquet(s"$inDir/purch")
-    // a stream-stream join commits ~4 state stores per shuffle partition per
-    // side per micro-batch; at the harness's 32 shuffle partitions that is
-    // hundreds of checkpoint commits for a 33-row result (profiled: 9.9 s
-    // → ~3 s at 4 partitions). State-partition count is a fixed deploy-time
-    // choice sized to STATE VOLUME, not to the session's batch-shuffle
-    // width — restore the session conf afterwards.
-    // restore only after the drain: the stream's session clone must see the
-    // override for its whole run, not just the start() call
-    val prevShuffle = spark.conf.get("spark.sql.shuffle.partitions")
-    try {
-      spark.conf.set("spark.sql.shuffle.partitions", "4")
-      val q = purchaseAttribution(cs, ps, delay = "90 days")
-        .writeStream.format("parquet")
-        .option("path", s"$run/out").option("checkpointLocation", s"$run/ckpt")
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-    } finally spark.conf.set("spark.sql.shuffle.partitions", prevShuffle)
+    drain(spark, pinState = true) { s =>
+      parquetSink(purchaseAttribution(replay(s, s"$inDir/clicks", 2),
+        replay(s, s"$inDir/purch", 2), delay = "90 days"), run)
+    }
     Tables.parquet(spark, s"$run/out")
       .select(col("user_id"),
         date_format(col("purchase_ts"), "yyyy-MM-dd HH:mm:ss").as("purchase_ts"),
@@ -668,7 +674,7 @@ object StreamOps {
     * ORIGINAL events table, which is the DuckDB oracle. Same replay
     * discipline as [[streamAttrib]]: span-covering watermark delay (state
     * is never evicted mid-backfill; the live 1 h-delay bounded-state
-    * config is the spec'd default), 4 state partitions during the drain. */
+    * config is the spec'd default), a state-pinned [[drain]]. */
   def streamDedup(spark: org.apache.spark.sql.SparkSession, sf: String): DataFrame = {
     val inDir = graft.ops.SourceOps.materialize(s"stream_dedup_in_$sf") { d =>
       val ev = graft.ops.EventOps.events(spark, sf)
@@ -677,18 +683,9 @@ object StreamOps {
         .repartition(6).write.parquet(s"$d/in")
     }
     withRunDir("stream_dedup_run_") { run =>
-    val stream = spark.readStream.schema(Tables.parquet(spark, s"$inDir/in").schema)
-      .option("maxFilesPerTrigger", "2").parquet(s"$inDir/in")
-    val prevShuffle = spark.conf.get("spark.sql.shuffle.partitions")
-    try {
-      spark.conf.set("spark.sql.shuffle.partitions", "4")
-      val q = dedupEvents(stream, delay = "3650 days")
-        .writeStream.format("parquet")
-        .option("path", s"$run/out").option("checkpointLocation", s"$run/ckpt")
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-    } finally spark.conf.set("spark.sql.shuffle.partitions", prevShuffle)
+    drain(spark, pinState = true) { s =>
+      parquetSink(dedupEvents(replay(s, s"$inDir/in", 2), delay = "3650 days"), run)
+    }
     Tables.parquet(spark, s"$run/out")
       .groupBy("event_type")
       .agg(count(lit(1)).as("n_events"),
@@ -730,18 +727,9 @@ object StreamOps {
         d, "in", 6, col("ts"), minParts = 3)
     }
     withRunDir("stream_window_run_") { run =>
-    val stream = spark.readStream.schema(Tables.parquet(spark, s"$inDir/in").schema)
-      .option("maxFilesPerTrigger", "2").parquet(s"$inDir/in")
-    val prevShuffle = spark.conf.get("spark.sql.shuffle.partitions")
-    try {
-      spark.conf.set("spark.sql.shuffle.partitions", "4")
-      val q = hourlyEventCounts(stream)
-        .writeStream.format("parquet")
-        .option("path", s"$run/out").option("checkpointLocation", s"$run/ckpt")
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-    } finally spark.conf.set("spark.sql.shuffle.partitions", prevShuffle)
+    drain(spark, pinState = true) { s =>
+      parquetSink(hourlyEventCounts(replay(s, s"$inDir/in", 2)), run)
+    }
     Tables.parquet(spark, s"$run/out")
       .select(date_format(col("hour"), "yyyy-MM-dd HH:mm:ss").as("hour"),
         col("event_type"), col("n"), col("sum_value"))
@@ -789,23 +777,12 @@ object StreamOps {
         .repartition(6).write.parquet(s"$d/in")
     }
     withRunDir("stream_update_run_") { run =>
-      val stream = spark.readStream
-        .schema(Tables.parquet(spark, s"$inDir/in").schema)
-        .option("maxFilesPerTrigger", "2").parquet(s"$inDir/in")
-      val prevShuffle = spark.conf.get("spark.sql.shuffle.partitions")
-      try {
-        spark.conf.set("spark.sql.shuffle.partitions", "4")
-        val q = dailyDashboard(stream).writeStream
-          .outputMode("update")
-          .option("checkpointLocation", s"$run/ckpt")
-          .foreachBatch { (batch: DataFrame, batchId: Long) =>
-            batch.withColumn("batch_id", lit(batchId))
-              .write.mode("append").parquet(s"$run/log")
-          }
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-          .start()
-        q.awaitTermination()
-      } finally spark.conf.set("spark.sql.shuffle.partitions", prevShuffle)
+      drain(spark, pinState = true) { s =>
+        eachBatch(dailyDashboard(replay(s, s"$inDir/in", 2)), s"$run/ckpt") { (batch, batchId) =>
+          batch.withColumn("batch_id", lit(batchId))
+            .write.mode("append").parquet(s"$run/log")
+        }.outputMode("update")
+      }
       dashboardFinalState(Tables.parquet(spark, s"$run/log"))
         .localCheckpoint() // eager — the run dir (sink + ckpt) dies on exit
     }
@@ -894,24 +871,8 @@ object StreamOps {
         d, "in", 6, col("ts"), minParts = 3)
     }
     withRunDir("stream_running_run_") { run =>
-    val stream = spark.readStream.schema(Tables.parquet(spark, s"$inDir/in").schema)
-      .option("maxFilesPerTrigger", "2").parquet(s"$inDir/in")
-    val prevShuffle = spark.conf.get("spark.sql.shuffle.partitions")
-    val providerKey = "spark.sql.streaming.stateStore.providerClass"
-    val prevProvider = spark.conf.getOption(providerKey)
-    try {
-      spark.conf.set("spark.sql.shuffle.partitions", "4")
-      spark.conf.set(providerKey,
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-      val q = runningTotals(stream)
-        .writeStream.format("parquet")
-        .option("path", s"$run/out").option("checkpointLocation", s"$run/ckpt")
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-    } finally {
-      spark.conf.set("spark.sql.shuffle.partitions", prevShuffle)
-      prevProvider.fold(spark.conf.unset(providerKey))(spark.conf.set(providerKey, _))
+    drain(spark, pinState = true, rocksDb = true) { s =>
+      parquetSink(runningTotals(replay(s, s"$inDir/in", 2)), run)
     }
     def f(c: org.apache.spark.sql.Column) = c.cast("string")
     val rowDigest = conv(substring(md5(concat_ws("|",
@@ -955,31 +916,15 @@ object StreamOps {
         minParts = 3)
     }
     withRunDir("stream_cov_run_") { run =>
-      val stream = spark.readStream.schema(Tables.parquet(spark, s"$inDir/in").schema)
-        .option("maxFilesPerTrigger", "2").parquet(s"$inDir/in")
-      val prevShuffle = spark.conf.get("spark.sql.shuffle.partitions")
-      val providerKey = "spark.sql.streaming.stateStore.providerClass"
-      val prevProvider = spark.conf.getOption(providerKey)
-      try {
-        spark.conf.set("spark.sql.shuffle.partitions", "4")
-        spark.conf.set(providerKey,
-          "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-        import spark.implicits._
-        val q = stream
+      drain(spark, pinState = true, rocksDb = true) { s =>
+        import s.implicits._
+        parquetSink(replay(s, s"$inDir/in", 2)
           .select((col("vec_id") % CovShards).as("shard"),
             graft.ops.VectorOps.asDouble(col("embedding")).as("v"))
           .as[CovEvent]
           .groupByKey(_.shard)
           .transformWithState(new CovMomentProcessor(graft.ops.VectorOps.Dim),
-            org.apache.spark.sql.streaming.TimeMode.None(), OutputMode.Append())
-          .writeStream.format("parquet")
-          .option("path", s"$run/out").option("checkpointLocation", s"$run/ckpt")
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-          .start()
-        q.awaitTermination()
-      } finally {
-        spark.conf.set("spark.sql.shuffle.partitions", prevShuffle)
-        prevProvider.fold(spark.conf.unset(providerKey))(spark.conf.set(providerKey, _))
+            org.apache.spark.sql.streaming.TimeMode.None(), OutputMode.Append()), run)
       }
       Tables.parquet(spark, s"$run/out").localCheckpoint()
     }
@@ -1074,11 +1019,8 @@ object StreamOps {
         minParts = 2)
     }
     withRunDir("stream_ann_run_") { run =>
-      val stream = spark.readStream.schema(Tables.parquet(spark, s"$inDir/in").schema)
-        .option("maxFilesPerTrigger", "1").parquet(s"$inDir/in")
-      val q = stream.writeStream
-        .option("checkpointLocation", s"$run/ckpt")
-        .foreachBatch { (batch: DataFrame, batchId: Long) =>
+      drain(spark) { s =>
+        eachBatch(replay(s, s"$inDir/in", 1), s"$run/ckpt") { (batch, batchId) =>
           // THE INGEST: micro-batch-sized assign + encode under the frozen
           // artifacts — the annAppend body, per arrival
           val assigned = km.transform(
@@ -1088,11 +1030,8 @@ object StreamOps {
           V.pqEncodeFrom(assigned, codebook)
             .withColumn("batch_id", lit(batchId))
             .write.mode("append").parquet(s"$run/log")
-          ()
         }
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
+      }
       val log = Tables.parquet(spark, s"$run/log")
       // replay-safe compaction on the ENCODING's key — one row per
       // (vector, PQ subspace), so the dedup key is (vec_id, s); keying on
@@ -1150,19 +1089,13 @@ object StreamOps {
       sf: String): DataFrame = {
     val inDir = stagedIngestDocsDir(spark, sf)
     withRunDir("stream_df_run_") { run =>
-      val stream = spark.readStream.schema(Tables.parquet(spark, s"$inDir/in").schema)
-        .option("maxFilesPerTrigger", "1").parquet(s"$inDir/in")
-      val q = stream.writeStream
-        .option("checkpointLocation", s"$run/ckpt")
-        .foreachBatch { (batch: DataFrame, batchId: Long) =>
+      drain(spark) { s =>
+        eachBatch(replay(s, s"$inDir/in", 1), s"$run/ckpt") { (batch, batchId) =>
           graft.ops.TextOps.lexCounts(batch)
             .withColumn("batch_id", lit(batchId))
             .write.mode("append").parquet(s"$run/log")
-          ()
         }
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
+      }
       Tables.parquet(spark, s"$run/log")
         .dropDuplicates("tok", "batch_id")
         .localCheckpoint() // eager — the run dir (log + ckpt) dies on exit
@@ -1234,11 +1167,8 @@ object StreamOps {
       sf: String, withCounts: Boolean): (DataFrame, Option[DataFrame]) = {
     val inDir = stagedIngestDocsDir(spark, sf)
     withRunDir("stream_post_run_") { run =>
-      val stream = spark.readStream.schema(Tables.parquet(spark, s"$inDir/in").schema)
-        .option("maxFilesPerTrigger", "1").parquet(s"$inDir/in")
-      val q = stream.writeStream
-        .option("checkpointLocation", s"$run/ckpt")
-        .foreachBatch { (batch: DataFrame, batchId: Long) =>
+      drain(spark) { s =>
+        eachBatch(replay(s, s"$inDir/in", 1), s"$run/ckpt") { (batch, batchId) =>
           batch.select(col("doc_id"),
               explode(graft.ops.TextOps.tokens(col("text"))).as("tok"))
             .groupBy("doc_id", "tok").agg(count(lit(1)).as("tf"))
@@ -1248,11 +1178,8 @@ object StreamOps {
             batch.agg(count(lit(1)).as("n_docs"))
               .withColumn("batch_id", lit(batchId))
               .write.mode("append").parquet(s"$run/nlog")
-          ()
         }
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
+      }
       (Tables.parquet(spark, s"$run/log")
         .dropDuplicates("doc_id", "tok", "batch_id")
         .localCheckpoint(), // eager — the run dir (log + ckpt) dies on exit

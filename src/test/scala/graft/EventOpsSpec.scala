@@ -47,6 +47,40 @@ class EventOpsSpec extends SparkSpec {
     assert(graft.ops.EventOps.events(spark, sf0001).schema("ts").dataType.typeName == "timestamp")
   }
 
+  test("events loader reads a TIMESTAMP(NANOS) column exactly, without a session conf") {
+    import org.apache.parquet.example.data.simple.SimpleGroupFactory
+    import org.apache.parquet.hadoop.example.ExampleParquetWriter
+    import org.apache.parquet.schema.MessageTypeParser
+    val schema = MessageTypeParser.parseMessageType(
+      "message events { required int64 event_id; " +
+        "required int64 ts (TIMESTAMP(NANOS,false)); }")
+    // every value is far above 2^53 ns; the third is one where double
+    // division rounds up into the next second (…201000000 µs)
+    val ns = Seq(1704067200000000000L, 1704067200123456789L, 1704067200999999999L)
+    val dir = java.nio.file.Files.createTempDirectory("nanos_events")
+    val writer = ExampleParquetWriter
+      .builder(new org.apache.hadoop.fs.Path(s"$dir/events.parquet"))
+      .withType(schema).build()
+    val groups = new SimpleGroupFactory(schema)
+    try ns.zipWithIndex.foreach { case (v, i) =>
+      writer.write(groups.newGroup().append("event_id", i.toLong).append("ts", v))
+    } finally writer.close()
+    val nanosKey = "spark.sql.legacy.parquet.nanosAsLong"
+    val confBefore = spark.conf.getOption(nanosKey)
+    def micros(): Seq[Long] = graft.ops.EventOps.events(spark, dir.toString)
+      .orderBy("event_id").select(unix_micros(col("ts"))).collect().map(_.getLong(0)).toSeq
+    // the scan reads the raw longs with either parquet reader
+    val vectorized = "spark.sql.parquet.enableVectorizedReader"
+    val readers = Seq("true", "false").map { v =>
+      val prev = spark.conf.getOption(vectorized)
+      spark.conf.set(vectorized, v)
+      try micros() finally prev.fold(spark.conf.unset(vectorized))(spark.conf.set(vectorized, _))
+    }
+    assert(readers.forall(_ == Seq(1704067200000000L, 1704067200123456L, 1704067200999999L)),
+      readers.toString)
+    assert(spark.conf.getOption(nanosKey) == confBefore, "events() wrote the session conf")
+  }
+
   test("funnel stages are ordered and monotonically non-increasing") {
     val rows = graft.ops.EventOps.funnel(spark, sf0001).collect()
       .map(r => r.getString(0) -> r.getLong(1))

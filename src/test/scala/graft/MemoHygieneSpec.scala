@@ -182,6 +182,28 @@ class MemoHygieneSpec extends SparkSpec {
     assert(fits.get() == 2)
   }
 
+  test("fitOrLoad: a missing file is fitted without a load attempt; a corrupt one is re-fitted") {
+    val file = tempModel("absent.txt")
+    val loads = new AtomicInteger(0)
+    def get(): String =
+      Artifacts.fitOrLoad[String](file.toString)(load = p => {
+        loads.incrementAndGet()
+        val s = Files.readString(p)
+        require(s == "model", "corrupt artifact")
+        s
+      }, save = (s, p) => Files.writeString(p, s))("model")
+    assert(!Files.exists(file))
+    assert(get() == "model")
+    assert(loads.get() == 0, "load was invoked on a missing file")
+    assert(Files.readString(file) == "model")
+    // a file that exists but fails to load still takes the re-fit path
+    Files.writeString(file, "garbage")
+    Artifacts.forgetModel(file.toString)
+    assert(get() == "model")
+    assert(loads.get() == 1)
+    assert(Files.readString(file) == "model")
+  }
+
   // ---- source lint: one memo mechanism -----------------------------------
 
   private val memoMechanism = raw"\b(?:ConcurrentHashMap|computeIfAbsent|MemoHygiene)\b".r
