@@ -27,9 +27,6 @@ object Bench {
       .master(s"local[$cpus]")
       .config("spark.sql.shuffle.partitions", cpus)
       .config("spark.sql.session.timeZone", "UTC")
-      // shuffle/spill scratch on the fastest ephemeral medium (see
-      // graft.Scratch — parameterised via SPARK_GRAFT_LOCAL_DIR)
-      .config("spark.local.dir", Scratch.localDir)
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")

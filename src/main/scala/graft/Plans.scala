@@ -10,8 +10,8 @@ object Plans {
     val sf = args.headOption.getOrElse("/root/testdata/sf0.01")
     val outDir = if (args.length > 1) args(1) else "target/plans"
     // SPARK_GRAFT_CPUS (default 4, the historical dump width) so a plan
-    // audit can also dump at the bench width — the loop-width exchanges
-    // (iterParts) are capped at the session conf and invisible at 4
+    // audit can also dump at the bench width — the graph loops' edge
+    // layouts (iterParts) are capped at the session width
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     val spark = SparkSession.builder().master(s"local[$cpus]")
       .withExtensions(new graft.functions.GraftExtensions)

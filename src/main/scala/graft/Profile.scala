@@ -11,7 +11,6 @@ object Profile {
       .withExtensions(new graft.functions.GraftExtensions)
       .config("spark.sql.shuffle.partitions", "32")
       .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.local.dir", Scratch.localDir)
       .config("spark.ui.enabled", "false").getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     names.foreach { name =>

@@ -20,8 +20,6 @@ object ProfileStages {
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.sql.adaptive.enabled",
         sys.env.getOrElse("PROFILE_AQE", "true"))
-      .config("spark.local.dir",
-        sys.env.getOrElse("PROFILE_LOCAL_DIR", Scratch.localDir))
       .config("spark.ui.enabled", "false")
       // PROFILE_CONF="k1=v1;k2=v2" — arbitrary conf overrides for A/B runs
       .config(sys.env.get("PROFILE_CONF").map(_.split(";").toSeq)

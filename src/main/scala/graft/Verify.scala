@@ -67,8 +67,6 @@ object Verify {
         .master(s"local[$cpus]")
         .config("spark.sql.shuffle.partitions", cpus)
         .config("spark.sql.session.timeZone", "UTC")
-        // same scratch policy as Bench (graft.Scratch scaladoc)
-        .config("spark.local.dir", Scratch.localDir)
         .config("spark.ui.enabled", "false")
         .getOrCreate()
       spark.sparkContext.setLogLevel("WARN")

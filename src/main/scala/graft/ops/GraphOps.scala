@@ -117,51 +117,47 @@ object GraphOps {
     * [[pageRank]] (both ~24-byte rows). */
   val GraphBroadcastMaxEdgesKey = "spark.graft.graph.broadcastMaxEdges"
 
-  private def broadcastMaxEdges(spark: SparkSession): Long =
-    spark.conf.getOption(GraphBroadcastMaxEdgesKey).map(_.toLong)
-      .getOrElse(GraphBroadcastMaxEdges)
+  /** The family's one broadcast guard: hint `broadcast` on node- or
+    * edge-sized state of `rows` rows while it fits under
+    * [[GraphBroadcastMaxEdgesKey]] (default [[GraphBroadcastMaxEdges]]),
+    * else leave the join to the planner. */
+  private def broadcastIfFits(spark: SparkSession, rows: Long): DataFrame => DataFrame =
+    if (rows <= spark.conf.getOption(GraphBroadcastMaxEdgesKey).map(_.toLong)
+        .getOrElse(GraphBroadcastMaxEdges)) broadcast else identity
 
-  /** Data-derived shuffle width for the ITERATION loops (r19, guide §2:
-    * derive partitioning from input size, never a constant tuned for one
-    * machine): the per-round state shuffles are edge/node-sized — a few
-    * tens of MB at bench scale — and at the session's full shuffle width
-    * every round pays map+reduce TASK DISPATCH far out of proportion to
-    * its bytes (measured on a synthetic 2.4M-row undDeg:
-    * 0.75 s/round at width 32 vs 0.22-0.26 s at width 4-8 on the same
-    * data). Width = rows × ~24 B over a 4 MB/task target, capped at the
-    * configured width — a 100 TB edge list saturates the cap, so a
-    * cluster's sizing is untouched; only the small-relation regime stops
-    * over-splitting. */
+  /** Per-task byte target of [[iterParts]]. From the r20 sweep
+    * (ProfileStages min-of-3 warm, local[32], sf0.1, targets 8M/4M/2M/1M ⇒
+    * widths ~7/14/28/32): the vote/peel loops were fastest at width ~14
+    * (q_communities 4.25 s vs 4.74 at w7 and 6.84 at w32; q_kcore 1.94 vs
+    * 2.20/2.80) while the lighter per-round joins were flat between w7 and
+    * w14 (q_pagerank 3.46/3.63, q_khop 1.46/1.47, q_sssp 1.94/2.01) and ALL
+    * loops degraded hard at session width 32 (pagerank 7.8 s — the r18
+    * shape). The sweep ran when every round still shuffled at that width. */
+  private val IterPartsTargetBytes = 4L << 20
+
+  /** Partition count of an iterated loop's static edge relation, derived
+    * from its size (r19, guide §2: derive partitioning from input size,
+    * never a constant tuned for one machine): rows × ~24 B over
+    * [[IterPartsTargetBytes]], capped at the session's shuffle width — a
+    * 100 TB edge list saturates the cap, so a cluster's sizing is
+    * untouched; only the small-relation regime stops over-splitting.
+    *
+    * Round layout (GraphX's edge partitioning, Gonzalez et al., OSDI 2014):
+    * each loop persists its static edge relation ONCE, hash-partitioned at
+    * `p` on the key its rounds aggregate by — [[pageRank]] on `d`,
+    * [[kHop]] and [[ssspFrom]] on `dst`, [[lpaLabels]] and [[kcore]] on
+    * `src`. Per-round state is node-sized, broadcast and
+    * `localCheckpoint`ed, so a round is a broadcast hash join that keeps the
+    * edge layout plus aggregates the layout already satisfies: no round
+    * exchanges, `p` only sets the tasks per round, and the session's
+    * shuffle width never reaches the rounds. A persisted
+    * `repartition(p, key)` keeps its hash partitioning; a `localCheckpoint`
+    * does not (it reports unknown partitioning), so the edge relation is
+    * never checkpointed. Past the broadcast guard the round joins become
+    * shuffle joins at the session width — the over-cap fallback. */
   private def iterParts(spark: SparkSession, rows: Long): Int = {
     val conf = spark.conf.get("spark.sql.shuffle.partitions").toInt
-    val target = spark.conf.getOption(IterPartsTargetKey).map(_.toLong)
-      .getOrElse(4L << 20)
-    math.max(1L, math.min(conf.toLong, rows * 24L / target + 1L)).toInt
-  }
-
-  /** Conf override for [[iterParts]]' per-task byte target (default 4 MB):
-    * a cluster whose per-round loop stages are compute-bound rather than
-    * dispatch-bound lowers it to widen the loops. The default comes from
-    * the r20 sweep (ProfileStages min-of-3 warm, local[32], sf0.1, targets
-    * 8M/4M/2M/1M ⇒ widths ~7/14/28/32): the vote/peel loops are fastest at
-    * width ~14 (q_communities 4.25 s vs 4.74 at w7 and 6.84 at w32;
-    * q_kcore 1.94 vs 2.20/2.80) while the lighter per-round joins are flat
-    * between w7 and w14 (q_pagerank 3.46/3.63, q_khop 1.46/1.47, q_sssp
-    * 1.94/2.01) and ALL loops degrade hard at session width 32 (pagerank
-    * 7.8 s — the r18 shape this family's width discipline removed). */
-  val IterPartsTargetKey = "spark.graft.graph.iterPartsTargetBytes"
-
-  /** Run `body` with `spark.sql.shuffle.partitions` pinned to `p`,
-    * restoring the session value after — the library's one remaining write
-    * of the caller's session conf (see the conf lint in ContractSmokeSpec).
-    * Only the EAGER work inside `body` (persist probes, per-round
-    * localCheckpoints) plans under `p`; a returned lazy frame keeps its
-    * checkpointed inputs and plans its own (node-sized) tail under the
-    * session conf. */
-  private def withLoopWidth[A](spark: SparkSession, p: Int)(body: => A): A = {
-    val prev = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", p.toString)
-    try body finally spark.conf.set("spark.sql.shuffle.partitions", prev)
+    math.max(1L, math.min(conf.toLong, rows * 24L / IterPartsTargetBytes + 1L)).toInt
   }
 
   def graphMetrics(spark: SparkSession, sf: String): DataFrame = {
@@ -171,8 +167,7 @@ object GraphOps {
     // — the same 1-row data-dependent plan choice as dedupJaccard's df
     // probe (driver-side-action ledger, PLANS.md)
     val m = e.count()
-    val maybeBroadcast: DataFrame => DataFrame =
-      if (m <= broadcastMaxEdges(spark)) broadcast else identity
+    val maybeBroadcast = broadcastIfFits(spark, m)
     val deg = e.select(explode(array(col("u"), col("v"))).as("n"))
       .groupBy("n").agg(count(lit(1)).as("deg"))
     // direct each edge from the (deg, key)-smaller endpoint to the larger
@@ -235,47 +230,41 @@ object GraphOps {
     * mean 1 (`r × n`, rounded to 4 decimals — ~1e-12 cross-engine float
     * noise after 10 iterations never reaches the 4th decimal of an O(1)
     * value). Each iteration is one join of the rank table (node-sized)
-    * against the out-degree-annotated edge list plus one map-side-combined
-    * sum per destination; ranks `localCheckpoint` every round so the
-    * logical plan stays one-iteration deep instead of growing 10 joins
-    * tall (the lineage lesson from the dup-clusters loop, PLANS.md). At
-    * 100 TB the edge list is the big side: bucket it by source so the
-    * per-iteration join co-locates with the shuffled rank table, and the
-    * rank state stays node-sized. Undirected ⇒ no dangling nodes, so the
-    * teleport term conserves rank mass exactly (asserted in the spec). */
+    * against the out-degree-annotated edge list plus one sum per
+    * destination; ranks `localCheckpoint` every round so the logical plan
+    * stays one-iteration deep instead of growing 10 joins tall (the
+    * lineage lesson from the dup-clusters loop, PLANS.md). The edge list
+    * is the big side: it is partitioned once by destination (see
+    * [[iterParts]]), so with the rank table broadcast each destination's
+    * inflow sums inside its own partition and the rank state stays
+    * node-sized. Undirected ⇒ no dangling nodes, so the teleport term
+    * conserves rank mass exactly (asserted in the spec). */
   def pageRank(spark: SparkSession, sf: String): DataFrame = {
     val e = edges(spark, sf)
-    // staged-parquet row count (metadata-cheap) sizes the loop width BEFORE
-    // the persisted relation is built, so cache layout and every round's
-    // shuffle share the derived width
+    // staged-parquet row count (metadata-cheap) sizes the edge layout
     val p = iterParts(spark, 2L * e.count())
-    withLoopWidth(spark, p) {
     val und = e.select(col("u").as("s"), col("v").as("d"))
       .unionAll(e.select(col("v").as("s"), col("u").as("d")))
     val deg = und.groupBy("s").agg(count(lit(1)).as("outdeg"))
-    // explicit repartition: the degree join may plan as a broadcast that
-    // leaves the scan's (single-row-group) partitioning on the cache — pin
-    // the derived width so all 10 edge passes run at it
-    val undDeg = und.join(deg, "s").repartition(p, col("s")).persist()
-    val n = undDeg.select(count_distinct(col("s"))).head().getLong(0)
+    val undDeg = und.join(deg, "s").repartition(p, col("d")).persist()
+    // undirected: every node is some edge's destination
+    val n = undDeg.select(count_distinct(col("d"))).head().getLong(0)
     // node-sized rank state broadcasts only while it FITS (same guarded
     // choice as graphMetrics' wedge joins; node threshold via the shared
     // conf key): profiled 10.6 -> 7.6 s warm at sf0.1 vs re-shuffling the
     // edges every round. Past the threshold — a billion-node graph — the
-    // join degrades to shuffle, where bucketing undDeg by source
-    // co-locates it with the shuffled rank table; a hard hint there would
-    // OOM every executor instead.
-    val maybeBroadcast: DataFrame => DataFrame =
-      if (n <= broadcastMaxEdges(spark)) broadcast else identity
-    var ranks = undDeg.select(col("s").as("n")).distinct()
+    // join degrades to shuffle; a hard hint there would OOM every executor
+    // instead.
+    val maybeBroadcast = broadcastIfFits(spark, n)
+    var ranks = undDeg.select(col("d").as("n")).distinct()
       .withColumn("r", lit(1.0 / n))
     (1 to 10).foreach { _ =>
-      // each iteration: one (map-side when broadcast) hash join plus one
-      // map-side-combined sum (the only shuffle, node-sized after partial
-      // agg); the floor is the 10 sequential passes over the edge list.
-      // Checkpoint cadence was swept in r19 (every 1/2/5/10 rounds, eager
-      // and lazy): per-round eager is flat-to-fastest — the cost lives in
-      // the edge pass itself, not the checkpoint.
+      // each iteration: one broadcast hash join plus one sum per d, both
+      // inside undDeg's partitions; the floor is the 10 sequential passes
+      // over the edge list. Checkpoint cadence was swept in r19 (every
+      // 1/2/5/10 rounds, eager and lazy): per-round eager is
+      // flat-to-fastest — the cost lives in the edge pass itself, not the
+      // checkpoint.
       ranks = undDeg.join(maybeBroadcast(ranks), undDeg("s") === ranks("n"))
         .groupBy(col("d"))
         .agg(sum(col("r") / col("outdeg")).as("inflow"))
@@ -287,7 +276,6 @@ object GraphOps {
       .select(col("n"), round(col("r") * n, 4).as("rank_scaled"))
       .orderBy(col("rank_scaled").desc, col("n"))
       .limit(20)
-    }
   }
 
   /** Key-oriented triangle count — the textbook u<v formulation the DuckDB
@@ -325,26 +313,25 @@ object GraphOps {
     * self-join+distinct derivation); the hint is for the cluster, where
     * re-shuffling the 100 TB edge list 3× is the bottleneck and a
     * node-state broadcast is exactly what the rank table already pays.
-    * Past the threshold the joins degrade to shuffles keyed on the node,
-    * where the edge list is hash-partitioned once and every round reuses
-    * that layout. Frontier and visited `localCheckpoint`
+    * The edge list is partitioned once by destination (see [[iterParts]]),
+    * so the round's distinct over the reached nodes runs inside its
+    * partitions. Frontier and visited `localCheckpoint`
     * per round (the dup-clusters lineage lesson: an iterated plan
     * re-analyzes its whole history otherwise). The fixed [[KHopDepth]]
     * keeps the oracle a genuine depth-bounded `WITH RECURSIVE` twin. */
   def kHop(spark: SparkSession, sf: String): DataFrame = {
     val e = edges(spark, sf)
-    // derived loop width (see iterParts): staged row count is metadata-cheap
+    // edge layout width (see iterParts): staged row count is metadata-cheap
     val p = iterParts(spark, 2L * e.count())
-    withLoopWidth(spark, p) {
     val dir = e.union(e.select(col("v").as("u"), col("u").as("v")))
       .select(col("u").as("src"), col("v").as("dst"))
-      .repartition(p, col("src"))
+      .repartition(p, col("dst"))
       .persist()
     // node-count probe for the guarded broadcast — same 1-row
-    // data-dependent plan choice as graphMetrics/pageRank
-    val n = dir.select(count_distinct(col("src"))).head().getLong(0)
-    val maybeBroadcast: DataFrame => DataFrame =
-      if (n <= broadcastMaxEdges(spark)) broadcast else identity
+    // data-dependent plan choice as graphMetrics/pageRank (both ways:
+    // every node is some edge's dst)
+    val n = dir.select(count_distinct(col("dst"))).head().getLong(0)
+    val maybeBroadcast = broadcastIfFits(spark, n)
     val seeds = Tables.load(spark, sf, "part")
       .filter(col("p_partkey") % KHopSeedMod === 0)
       .select(col("p_partkey").as("node"), lit(0L).as("lvl"))
@@ -367,7 +354,6 @@ object GraphOps {
     visited.groupBy("lvl")
       .agg(count(lit(1)).as("n_nodes"))
       .orderBy("lvl")
-    }
   }
 
   /** Relaxation-round bound for [[sssp]] — results are exact for every
@@ -384,13 +370,11 @@ object GraphOps {
     * candidates into the standing distance table — so dist_r(v) is
     * EXACTLY min over ≤ r-edge walks, which is what the depth-bounded
     * recursive-CTE oracle enumerates. Distance state is node-bounded and
-    * rides the same guarded broadcast as the [[kHop]] frontier; past the
-    * threshold the rounds become hash-joins that reuse the edge list's
-    * one-time partitioning. `localCheckpoint` per round keeps lineage
-    * flat (the iterated-plan lesson). At 100 TB: H sequential rounds of
-    * (edges ⋈ node-state + map-combined min) — shuffle volume per round
-    * is the relaxed-candidate stream, never edges × rounds re-derived,
-    * because the directed edge list is persisted once up front. */
+    * rides the same guarded broadcast as the [[kHop]] frontier.
+    * `localCheckpoint` per round keeps lineage flat (the iterated-plan
+    * lesson). At 100 TB: H sequential rounds of (edges ⋈ node-state + min
+    * per destination) over a directed edge list partitioned once up front
+    * ([[ssspFrom]]), so no round shuffles. */
   def sssp(spark: SparkSession, sf: String): DataFrame = {
     val e = edges(spark, sf)
     val dir = e.union(e.select(col("v").as("u"), col("u").as("v")))
@@ -408,29 +392,35 @@ object GraphOps {
   /** Core bounded Bellman-Ford over directed weighted edges (src, dst, w)
     * from a seed set: returns (node, dist) with dist = min cost over walks
     * of ≤ `hops` edges. Extracted from [[sssp]] so the planted-graph spec
-    * can check hand-computed distances. */
+    * can check hand-computed distances.
+    *
+    * A zero-weight self-loop on every node that can hold a distance (each
+    * edge head and each seed) carries that node's distance into the next
+    * round — LPA's self-vote trick — so `dist ∪ relaxed → min` is one min
+    * per destination, inside the dst-partitioned edge layout (see
+    * [[iterParts]]). */
   def ssspFrom(spark: SparkSession, dirEdges: DataFrame, seeds: DataFrame,
       hops: Int): DataFrame = {
-    // size the loop width from the (cheap, un-persisted) edge count —
+    // size the edge layout from the (cheap, un-persisted) edge count —
     // one extra pass over the slim edge projection, paid once
     val p = iterParts(spark, dirEdges.count())
-    withLoopWidth(spark, p) {
-    val dir = dirEdges.repartition(p, col("src")).persist()
-    val n = dir.select(count_distinct(col("src"))).head().getLong(0)
-    val maybeBroadcast: DataFrame => DataFrame =
-      if (n <= broadcastMaxEdges(spark)) broadcast else identity
+    val loops = dirEdges.select(col("dst").as("node")).union(seeds.select("node"))
+      .distinct()
+      .select(col("node").as("src"), col("node").as("dst"), lit(0L).as("w"))
+    val dir = dirEdges.unionByName(loops).repartition(p, col("dst")).persist()
+    // every node that can hold a distance has a self-loop, so is some dst
+    val n = dir.select(count_distinct(col("dst"))).head().getLong(0)
+    val maybeBroadcast = broadcastIfFits(spark, n)
     var dist = seeds.select(col("node"), lit(0L).as("dist")).localCheckpoint()
     for (_ <- 1 to hops) {
-      val relaxed = dir
+      dist = dir
         .join(maybeBroadcast(dist), dist("node") === dir("src"))
         .select(col("dst").as("node"), (col("dist") + col("w")).as("dist"))
-      dist = dist.union(relaxed)
         .groupBy("node").agg(min("dist").as("dist"))
         .localCheckpoint()
     }
     dir.unpersist()
     dist
-    }
   }
 
   /** Synchronous vote rounds in [[communities]] — fixed so the DuckDB
@@ -454,8 +444,8 @@ object GraphOps {
     * that survives 100 TB where modularity methods (Louvain) don't
     * shard: per round it is ONE equi-join of the node-sized label table
     * against the standing edge list (guarded broadcast, the
-    * [[pageRank]] rank-table discipline) and two map-side-combined
-    * aggregations whose shuffle volume is bounded by Σ deg = 2m — no
+    * [[pageRank]] rank-table discipline) and two aggregations by voter,
+    * both inside the src-partitioned edge layout (see [[iterParts]]) — no
     * global modularity state, no sequential vertex sweeps.
     * `localCheckpoint` per round keeps the iterated plan flat (the
     * dup-clusters lineage lesson). The per-node argmax is a single
@@ -474,22 +464,22 @@ object GraphOps {
     * the SAME partition of the graph. */
   private[graft] def lpaLabels(spark: SparkSession, sf: String): DataFrame = {
     val e = edges(spark, sf)
-    // derived loop width (see iterParts): staged row count is metadata-cheap
+    // edge layout width (see iterParts): staged row count is metadata-cheap
     val p = iterParts(spark, 2L * e.count())
-    withLoopWidth(spark, p) {
     val dir = e.select(col("u").as("src"), col("v").as("dst"))
       .union(e.select(col("v").as("src"), col("u").as("dst")))
     val nodes = dir.select(col("src").as("node")).distinct()
-    // self-vote = one extra (node, node) edge per node; vote edges key the
-    // per-round join on dst — pin the derived width on that key
+    // self-vote = one extra (node, node) edge per node; src receives dst's
+    // label, and both vote aggregates group by src
     val votesTo = dir
       .union(nodes.select(col("node").as("src"), col("node").as("dst")))
-      .repartition(p, col("dst"))
+      .repartition(p, col("src"))
       .persist()
     val n = votesTo.select(count_distinct(col("src"))).head().getLong(0)
-    val maybeBroadcast: DataFrame => DataFrame =
-      if (n <= broadcastMaxEdges(spark)) broadcast else identity
-    var labels = nodes.withColumn("label", col("node")).localCheckpoint()
+    val maybeBroadcast = broadcastIfFits(spark, n)
+    // every node votes for itself, so the initial labels come off the layout
+    var labels = votesTo.select(col("src").as("node")).distinct()
+      .withColumn("label", col("node")).localCheckpoint()
     for (_ <- 1 to LpaRounds) {
       labels = votesTo
         .join(maybeBroadcast(labels), labels("node") === votesTo("dst"))
@@ -501,7 +491,6 @@ object GraphOps {
     }
     votesTo.unpersist()
     labels
-    }
   }
 
   /** Modularity of the LPA partition (Newman & Girvan 2004) — the quality
@@ -579,45 +568,51 @@ object GraphOps {
     * much of the graph survives each peel and whether the fixpoint was
     * reached (consecutive equal rows). Deterministic by construction, so
     * the oracle VALUE-checks it with mechanically unrolled peel rounds.
-    * Per round: one degree aggregation (shuffle ≤ Σ deg with map-side
-    * combine) and two semi-joins of the edge list against the node-sized
-    * survivor set (guarded broadcast, the family discipline; past the
-    * threshold they become hash joins reusing the edge list's
-    * partitioning); `localCheckpoint` per round keeps lineage flat. The
-    * census rows are LAZY 1-row aggregates unioned at the end — no
-    * per-round driver action, only the one k/N probe. */
+    * Per round: two semi-joins of the edge list against the node-sized
+    * set of nodes left (guarded broadcast, the family discipline) and one
+    * degree count per node, inside the src-partitioned edge layout (see
+    * [[iterParts]]); the node-sized degree state `localCheckpoint`s per
+    * round to keep lineage flat, while the edge relation stays persisted —
+    * a checkpointed edge state would lose its partitioning and re-shuffle
+    * every round. The census is one LAZY aggregate over node-sized
+    * per-round tallies — no per-round driver action or exchange, only the
+    * one k/N probe. */
   def kcore(spark: SparkSession, sf: String): DataFrame = {
     val e = edges(spark, sf)
-    // derived loop width (see iterParts): staged row count is metadata-cheap
+    // edge layout width (see iterParts): staged row count is metadata-cheap
     val p = iterParts(spark, 2L * e.count())
-    withLoopWidth(spark, p) {
-    var cur = e.union(e.select(col("v").as("u"), col("u").as("v")))
+    val und = e.union(e.select(col("v").as("u"), col("u").as("v")))
       .select(col("u").as("src"), col("v").as("dst"))
       .repartition(p, col("src"))
-      .localCheckpoint()
+      .persist()
     // one probe returns N and 2E: k = 2E/N + 1 and the broadcast guard
-    val probe = cur.agg(count_distinct(col("src")), count(lit(1))).head()
+    val probe = und.agg(count_distinct(col("src")), count(lit(1))).head()
     val (n, twoE) = (probe.getLong(0), probe.getLong(1))
     val k = twoE / n + 1
-    val maybeBroadcast: DataFrame => DataFrame =
-      if (n <= broadcastMaxEdges(spark)) broadcast else identity
-    var census = Seq(
-      spark.range(1).select(lit(0L).as("round"), lit(n).as("n_nodes"),
-        lit(twoE / 2).as("n_edges")))
+    val maybeBroadcast = broadcastIfFits(spark, n)
+    // round r's state: every node left after peel r that still has an
+    // edge, with its degree among the nodes left (round 0: the whole graph)
+    var deg = und.groupBy("src").agg(count(lit(1)).as("deg")).localCheckpoint()
+    // census row r = (nodes left, Σ deg / 2), tallied as (round, v, d) rows;
+    // the zero rows keep a round that peeled everything
+    var tally = Seq(
+      spark.range(KCoreRounds + 1).select(col("id").as("round"), lit(0L).as("v"), lit(0L).as("d")),
+      deg.select(lit(0L), lit(1L), col("deg")))
     for (r <- 1 to KCoreRounds) {
-      val surv = cur.groupBy("src").agg(count(lit(1)).as("deg"))
-        .filter(col("deg") >= k).select(col("src").as("node"))
+      val left = deg.filter(col("deg") >= k).select(col("src"))
+      deg = und
+        .join(maybeBroadcast(left), Seq("src"), "left_semi")
+        .join(maybeBroadcast(left.select(col("src").as("dst"))), Seq("dst"), "left_semi")
+        .groupBy("src").agg(count(lit(1)).as("deg"))
         .localCheckpoint()
-      cur = cur
-        .join(maybeBroadcast(surv.select(col("node").as("src"))), Seq("src"), "left_semi")
-        .join(maybeBroadcast(surv.select(col("node").as("dst"))), Seq("dst"), "left_semi")
-        .localCheckpoint()
-      census = census :+ surv.agg(count(lit(1)).as("n_nodes"))
-        .crossJoin(cur.agg((count(lit(1)) / lit(2)).cast("long").as("n_edges")))
-        .select(lit(r.toLong).as("round"), col("n_nodes"), col("n_edges"))
+      tally = tally ++ Seq(left.select(lit(r.toLong), lit(1L), lit(0L)),
+        deg.select(lit(r.toLong), lit(0L), col("deg")))
     }
-    census.reduce(_ unionAll _).orderBy("round")
-    }
+    und.unpersist()
+    tally.reduce(_ unionAll _)
+      .groupBy("round")
+      .agg(sum("v").as("n_nodes"), (sum("d") / 2).cast("long").as("n_edges"))
+      .orderBy("round")
   }
 
   /** Degree assortativity (Newman 2002, eq. 4 over the edge list): the
@@ -638,8 +633,7 @@ object GraphOps {
     val sym = e.union(e.select(col("v").as("u"), col("u").as("v")))
     val deg = sym.groupBy(col("u").as("node")).agg(count(lit(1)).as("deg"))
     val n = deg.count()
-    val maybeBroadcast: DataFrame => DataFrame =
-      if (n <= broadcastMaxEdges(spark)) broadcast else identity
+    val maybeBroadcast = broadcastIfFits(spark, n)
     sym
       .join(maybeBroadcast(deg.select(col("node").as("u"), col("deg").as("du"))), "u")
       .join(maybeBroadcast(deg.select(col("node").as("v"), col("deg").as("dv"))), "v")

@@ -75,9 +75,7 @@ class ContractSmokeSpec extends SparkSpec {
     * (file, text on the line) -> reason. */
   private val ledger = Map(
     ("streaming/StreamOps.scala", "scoped.conf.set(") ->
-      "the stream drain's scoped clone: the caller's session is never written",
-    ("ops/GraphOps.scala", "spark.conf.set(\"spark.sql.shuffle.partitions\"") ->
-      "GraphOps.withLoopWidth pins the loop width and restores it; the loop-width rule owns it")
+      "the stream drain's scoped clone: the caller's session is never written")
 
   /** (violations, ledger entries that matched a line). */
   private def lint(sources: Seq[(String, String)]): (Seq[String], Set[(String, String)]) = {

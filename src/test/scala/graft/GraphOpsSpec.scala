@@ -283,22 +283,30 @@ class GraphOpsSpec extends SparkSpec with org.scalatest.BeforeAndAfterEach {
     assert(got == Map(1L -> 4L), s"got $got")
   }
 
-  test("lpaLabels: artifact CONSTRUCTION is identical under perturbed partitioning") {
+  test("graph loops: results are identical under perturbed partitioning") {
+    import spark.implicits._
     // the stability gate re-runs queries over MEMOIZED staging artifacts,
     // so construction-order sensitivity is its documented blind spot (r12
-    // advisor). LPA's claim is determinism by integer-exact votes +
-    // deterministic tie-breaks — machine-check it: derive the label table
-    // at coprime shuffle-partition counts and demand set equality.
-    def labels(): Seq[(Long, Long)] = GraphOps.lpaLabels(spark, sf0001)
-      .collect().map(r => (r.getLong(0), r.getLong(1))).sorted.toSeq
+    // advisor). Each loop claims determinism — LPA by integer-exact votes
+    // and deterministic tie-breaks, pageRank's per-destination sums by the
+    // edge layout's order — so machine-check it: run each at coprime
+    // shuffle-partition counts and demand equal results.
+    val dir = Seq((1L, 2L, 2L), (2L, 3L, 1L), (3L, 4L, 1L), (1L, 3L, 5L)).toDF("src", "dst", "w")
+    val seeds = Seq(1L).toDF("node")
+    val loops = Seq[(String, () => org.apache.spark.sql.DataFrame)](
+      "lpaLabels" -> (() => GraphOps.lpaLabels(spark, sf0001)),
+      "pageRank" -> (() => GraphOps.pageRank(spark, sf0001)),
+      "kHop" -> (() => GraphOps.kHop(spark, sf0001)),
+      "ssspFrom" -> (() => GraphOps.ssspFrom(spark, dir, seeds, hops = 4)),
+      "kcore" -> (() => GraphOps.kcore(spark, sf0001)))
     val prev = spark.conf.get("spark.sql.shuffle.partitions")
-    try {
-      spark.conf.set("spark.sql.shuffle.partitions", "7")
-      val a = labels()
-      spark.catalog.clearCache()
-      spark.conf.set("spark.sql.shuffle.partitions", "31")
-      val b = labels()
-      assert(a == b, "LPA label construction must be a pure function of the graph")
+    try loops.foreach { case (name, loop) =>
+      val Seq(a, b) = Seq("7", "31").map { width =>
+        spark.catalog.clearCache()
+        spark.conf.set("spark.sql.shuffle.partitions", width)
+        loop().collect().map(_.toString).sorted.toSeq
+      }
+      assert(a.nonEmpty && a == b, s"$name must be a pure function of the graph")
     } finally spark.conf.set("spark.sql.shuffle.partitions", prev)
   }
 }

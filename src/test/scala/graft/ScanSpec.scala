@@ -2,9 +2,7 @@ package graft
 
 import graft.sources.Tables
 import java.nio.file.{Files, Path, Paths}
-import java.util.concurrent.atomic.AtomicInteger
 import org.apache.spark.SparkThrowable
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.{AnalysisException, DataFrame}
 import org.apache.spark.sql.types.{DateType, TimestampNTZType, TimestampType}
 import scala.jdk.CollectionConverters._
@@ -34,34 +32,6 @@ class ScanSpec extends SparkSpec with org.scalatest.BeforeAndAfterAll {
     // StructType equality covers names, types, nullability and metadata
     assert(footer.schema == inferred.schema, s"schema differs for $path")
     assert(footer.collect().toSeq == inferred.collect().toSeq, s"rows differ for $path")
-  }
-
-  /** Jobs started on this thread while `body` runs. Listener delivery is
-    * asynchronous but ordered, so a marker job run afterwards under its own
-    * group flushes every earlier job-start event before the count is read. */
-  private def jobsDuring[A](body: => A): (A, Int) = {
-    val sc = spark.sparkContext
-    val group = s"scanspec-${System.nanoTime()}"
-    val marker = s"$group-marker"
-    val counted = new AtomicInteger(0)
-    val markerSeen = new java.util.concurrent.CountDownLatch(1)
-    val listener = new SparkListener {
-      override def onJobStart(j: SparkListenerJobStart): Unit =
-        Option(j.properties).map(_.getProperty("spark.jobGroup.id")).orNull match {
-          case `group` => counted.incrementAndGet()
-          case `marker` => markerSeen.countDown()
-          case _ =>
-        }
-    }
-    sc.addSparkListener(listener)
-    try {
-      sc.setJobGroup(group, "scan spec")
-      val out = try body finally sc.clearJobGroup()
-      sc.setJobGroup(marker, "scan spec marker")
-      try spark.range(1).count() finally sc.clearJobGroup()
-      assert(markerSeen.await(30, java.util.concurrent.TimeUnit.SECONDS))
-      (out, counted.get())
-    } finally sc.removeSparkListener(listener)
   }
 
   private def failureOf(body: => DataFrame): Throwable =
@@ -174,20 +144,20 @@ class ScanSpec extends SparkSpec with org.scalatest.BeforeAndAfterAll {
   }
 
   test("Tables.load and Tables.parquet run no Spark job") {
-    val (_, loadJobs) = jobsDuring(Tables.names.map(Tables.load(spark, sf0001, _)))
+    val loadJobs = started(Tables.names.map(Tables.load(spark, sf0001, _)))._2.jobs
     assert(loadJobs == 0)
     val dayDir = graft.ops.SourceOps.eventsDayDir(spark, sf0001)
-    val (_, scanJobs) = jobsDuring(Tables.parquet(spark, dayDir))
+    val scanJobs = started(Tables.parquet(spark, dayDir))._2.jobs
     assert(scanJobs == 0)
     // the listener does see the inference job a bare read runs
-    val (_, inferJobs) = jobsDuring(spark.read.parquet(dayDir))
+    val inferJobs = started(spark.read.parquet(dayDir))._2.jobs
     assert(inferJobs >= 1)
   }
 
   test("the nine app_analytics builders run no Spark job at sf0.001") {
     appAnalytics.foreach { q =>
-      val (df, jobs) = jobsDuring(SparkEntry.queries(q)(spark, sf0001))
-      assert(jobs == 0, s"$q's builder ran $jobs job(s)")
+      val (df, ran) = started(SparkEntry.queries(q)(spark, sf0001))
+      assert(ran.jobs == 0, s"$q's builder ran ${ran.jobs} job(s)")
       assert(df.columns.nonEmpty)
       spark.catalog.clearCache()
     }

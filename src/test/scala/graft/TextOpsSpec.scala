@@ -2,6 +2,10 @@ package graft
 
 import org.apache.spark.sql.functions._
 import graft.ops.TextOps
+import org.apache.spark.sql.execution.SparkPlan
+import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
+import org.apache.spark.sql.execution.exchange.ReusedExchangeExec
 
 class TextOpsSpec extends SparkSpec {
   import spark.implicits._
@@ -109,21 +113,20 @@ class TextOpsSpec extends SparkSpec {
     assert(r(3L)._3 == 0L && r(3L)._2 == 27L)
   }
 
+  /** The inputs of an executed plan node, through AQE stages, reused
+    * exchanges, cached relations and subqueries. */
+  private def kids(p: SparkPlan): Seq[SparkPlan] = p match {
+    case a: AdaptiveSparkPlanExec => Seq(a.executedPlan)
+    case s: QueryStageExec => Seq(s.plan)
+    case r: ReusedExchangeExec => Seq(r.child)
+    case m: InMemoryTableScanExec => Seq(m.relation.cachedPlan)
+    case other => other.children ++ other.subqueries
+  }
+
   test("q_dedup_span_cut plan: each documents branch tokenizes once") {
     import org.apache.spark.sql.catalyst.expressions.{Lower, StringSplit}
-    import org.apache.spark.sql.execution.SparkPlan
-    import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
-    import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
-    import org.apache.spark.sql.execution.exchange.ReusedExchangeExec
     val df = TextOps.dedupSpanCut(spark, sf0001)
     df.collect()
-    def kids(p: SparkPlan): Seq[SparkPlan] = p match {
-      case a: AdaptiveSparkPlanExec => Seq(a.executedPlan)
-      case s: QueryStageExec => Seq(s.plan)
-      case r: ReusedExchangeExec => Seq(r.child)
-      case m: InMemoryTableScanExec => Seq(m.relation.cachedPlan)
-      case other => other.children ++ other.subqueries
-    }
     def splits(p: SparkPlan): Int =
       p.expressions.map(_.collect { case StringSplit(Lower(_), _, _) => }.size).sum
     // the most tokenizations on any root-to-scan path, i.e. per row of a
@@ -131,6 +134,24 @@ class TextOpsSpec extends SparkSpec {
     def worstPath(p: SparkPlan): Int = splits(p) + kids(p).map(worstPath).maxOption.getOrElse(0)
     val plan = df.queryExecution.executedPlan
     assert(worstPath(plan) == 1, plan.toString)
+  }
+
+  test("q_hybrid_lifecycle plan: every rank window sits above a limit") {
+    import org.apache.spark.sql.execution.{CollectLimitExec, GlobalLimitExec, TakeOrderedAndProjectExec}
+    import org.apache.spark.sql.execution.window.WindowExec
+    // both arms' global row_number windows rank a top-k, never the corpus:
+    // the lexical arm ends in bm25's limit(20), the dense one in
+    // cosineTopkN's limit(HybridTopN)
+    val df = SparkEntry.queries("q_hybrid_lifecycle")(spark, sf0001)
+    df.collect()
+    def nodes(p: SparkPlan): Seq[SparkPlan] = p +: kids(p).flatMap(nodes)
+    def limited(p: SparkPlan): Boolean = p match {
+      case _: TakeOrderedAndProjectExec | _: GlobalLimitExec | _: CollectLimitExec => true
+      case _ => kids(p) match { case Seq(only) => limited(only); case _ => false }
+    }
+    val plan = df.queryExecution.executedPlan
+    val windows = nodes(plan).collect { case w: WindowExec => w }
+    assert(windows.nonEmpty && windows.forall(w => limited(w.child)), plan.toString)
   }
 
   test("dedupSpanCut reconciles with dupSpanCoverage on the fixture corpus") {
